@@ -5,8 +5,8 @@ Generalizes the reference's duplicate-pk dict overwrite
 field values per raw_pk) into an ordered LWW keyed on arbitrary columns with
 an explicit ordering (commit_seq, commit tiebreak).
 
-Three formulations, all semantically identical (tested against each other
-and the pure-Python oracle):
+Three formulations of the per-key winner, all semantically identical
+(tested against each other and the pure-Python oracle):
 
 * ``lww_latest``  — ``max`` over a comparable struct (equivalent to
   ``max_by``). **Preferred at scale**: hash aggregation with map-side
@@ -15,15 +15,20 @@ and the pure-Python oracle):
   holding 50% of all events) costs the reducer O(partitions), not O(events).
   No sort, no window, skew-immune by construction.
 * ``lww_window`` — ``row_number() OVER (PARTITION BY keys ORDER BY ord
-  DESC)``. Kept for parity testing and for callers that need the losing
-  rows too (rank > 1). Requires a full sort per key, and a hot key lands on
-  one task — use the salted variant for skewed data.
+  DESC)``. The reference implementation ``lww_latest`` is tested against,
+  and a template for callers that need the losing rows too (rank > 1).
+  Requires a full sort per key, and a hot key lands on one task — use the
+  salted variant for skewed data.
 * ``lww_latest_salted`` — explicit two-phase aggregation via a deterministic
   salt derived from the ordering column. Exists to *demonstrate* the salting
   pattern (BASELINE north_star: "hot repos are salted/repartitioned to
   defeat skew") and for engines/configs where partial aggregation is
   disabled; with hash-agg enabled it produces the same plan shape as
   phase1+phase2 manual combine.
+
+``final_state`` replays a whole log with ``lww_latest`` and drops the
+winning tombstones; ``lww_patch`` is the column-level variant (NULL in an
+update means "unchanged").
 """
 
 from __future__ import annotations
@@ -133,24 +138,15 @@ def lww_latest_salted(
     return phase2.select(*_select_back(df.columns, keys, order_cols))
 
 
-def collapse_batch(
-    df: DataFrame,
-    keys: Sequence[str] = ("repo", "path"),
-    order_cols: Sequence[str] = ("commit_seq", "commit"),
-) -> DataFrame:
-    """Collapse a change-event micro-batch to one winning event per key
-    (op retained — a winning 'D' becomes a delete in the MERGE)."""
-    return lww_latest(df, keys, order_cols)
-
-
 def final_state(
     df: DataFrame,
     keys: Sequence[str] = ("repo", "path"),
     order_cols: Sequence[str] = ("commit_seq", "commit"),
     op_col: str = "op",
 ) -> DataFrame:
-    """Full-log replay to final table state: LWW winners minus tombstones."""
-    return collapse_batch(df, keys, order_cols).where(F.col(op_col) != "D")
+    """Full-log replay to final table state: LWW winners (``lww_latest``,
+    op retained) minus tombstones."""
+    return lww_latest(df, keys, order_cols).where(F.col(op_col) != "D")
 
 
 def lww_patch(

@@ -1,9 +1,10 @@
-"""CDC replay throughput bench — one parallelism level per process.
+"""CDC replay throughput — one parallelism level per process.
 
 Replays a pre-generated change-log parquet (partitioned by batch_id) into a
-fresh SnapshotTable and reports events/sec. Run at two parallelism levels
-(local[N] vs local[4N]) on the *same input files* to evidence the
-north-rule scaling criterion (sandbox stand-in for N vs 4N executors).
+fresh SnapshotTable with the engine's default replay configuration and
+writes events/sec plus the per-batch phase profile as JSON. This is the
+spark-submit entry (tools/replay_submit_main.py delegates here) and one side
+of bench.py's local[N] vs local[4N] pair.
 
 Usage: python -m arches_rascoll_etl_spark.replay_bench \
          --cores 8 --events /path/events_parquet --workdir /tmp/x --out r.json
@@ -18,55 +19,6 @@ import shutil
 import time
 
 
-def chained_sha(content_col, rounds: int, mode: str = "repeat"):
-    """sha256 work worth ``rounds`` content-hashes, output always one
-    64-char hex column so downstream shuffle bytes are round-invariant —
-    the property the CPU-roofline scaling experiment depends on.
-
-    ``mode="repeat"``: round 0 hashes repeat(content, n0), each later
-    round hashes (prev_hex_digest || repeat(content, n_i)), the n_i
-    summing to ``rounds``. Fold depth is capped at 8 and the byte volume
-    carried by ``repeat`` — a rounds-deep sha2(concat(...)) nest overflows
-    the Catalyst analyzer's stack around depth ~100 (measured; tree-
-    recursive analysis) and would bust whole-stage codegen's method-size
-    budget anyway. CAVEAT found in round 4: per hashed byte this also
-    COPIES a byte (the repeat buffer — ~60 KB per blob at rounds=8000), so
-    at 16 cores the variant demands ~8+ GB/s of allocation+memcpy and is
-    still partly DRAM-bound on one box; it under-states plan scaling when
-    the box's bandwidth grant is poor.
-
-    ``mode="fold"``: a true compute-per-byte workload —
-    aggregate(sequence(1, rounds), sha2(content), (acc, _) -> sha2(acc)):
-    ``rounds`` dependent sha256 invocations over a 64-byte digest. The
-    loop is RUNTIME iteration inside one higher-order-function expression
-    (tree depth constant in rounds), the working set is one digest (stays
-    in L1), and per-round allocation is a nursery-lifetime 64-char string
-    — the same resource profile as the multiprocess-sha256 probe that
-    defines the host CPU ceiling, which is what makes efficiency-vs-
-    ceiling a like-for-like comparison."""
-    from pyspark.sql import functions as F
-
-    if rounds <= 1:
-        return F.sha2(content_col, 256)
-    if mode == "fold":
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(int(rounds))),
-            F.sha2(content_col, 256),
-            lambda acc, _: F.sha2(acc, 256),
-        )
-    depth = min(rounds, 8)
-    base, rem = divmod(rounds, depth)
-
-    def blob(i: int):
-        n = base + (1 if i < rem else 0)
-        return F.repeat(content_col, n) if n != 1 else content_col
-
-    sha = F.sha2(blob(0), 256)
-    for i in range(1, depth):
-        sha = F.sha2(F.concat(sha, blob(i)), 256)
-    return sha
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int, required=True)
@@ -75,22 +27,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--n-batches", type=int, default=4)
     ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument(
-        "--sha-rounds", type=int, default=1,
-        help="chained sha256 rounds over content in the normalize stage. "
-             "1 = the production plan. >1 raises the map stage's arithmetic "
-             "intensity WITHOUT changing a single shuffled byte (the fold "
-             "stays one 64-char column), moving the job's roofline from "
-             "DRAM bandwidth to CPU — the scaling-ceiling experiment: on "
-             "this one box DRAM does not multiply with cores, but on a real "
-             "N->4N cluster both do, so efficiency vs the CPU ceiling at "
-             "high rounds bounds what the PLAN (not the box) allows.")
-    ap.add_argument(
-        "--sha-mode", choices=("repeat", "fold"), default="repeat",
-        help="dense-variant shape (see chained_sha): repeat = byte-volume "
-             "dense (carries a memcpy per hashed byte), fold = true "
-             "compute-per-byte dense (L1-resident digest chain, matches "
-             "the CPU-ceiling probe's resource profile)")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -100,42 +36,12 @@ def main() -> None:
     from .streaming.checkpoint import Checkpoint
     from .streaming.pipeline import replay
 
-    # SPARK_GRAFT_STAGE_METRICS=1 turns on the driver UI's status store so
-    # the run can dump per-stage executorCpuTime / jvmGcTime / shuffle
-    # waits at the end (REST API) — the instrument that decomposes a
-    # scaling window's per-event CPU inflation into plan-attributable
-    # (GC, shuffle, scheduler) vs host-attributable (frequency, steal)
-    # parts. Off by default: the status store costs driver CPU.
-    want_stage_metrics = bool(os.environ.get("SPARK_GRAFT_STAGE_METRICS"))
     spark = get_spark(
         app_name=f"replay-bench-{args.cores}",
         cores=args.cores,
         shuffle_partitions=max(args.cores * 2, 16),
-        extra_conf=(
-            {"spark.ui.enabled": "true", "spark.ui.port": "0"}
-            if want_stage_metrics else None
-        ),
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    if args.sha_rounds > 1:
-        # CPU-dense scan stages must be split for COMPUTE, not bytes.
-        # Spark sizes file splits by maxPartitionBytes/openCost — correct
-        # when cost ∝ bytes, but rounds>1 multiplies per-byte work ~rounds×,
-        # so the default 128 MB/4 MB packing hands a 16-core level as few
-        # as 4 scan tasks over a small-events input (zero scheduling slack;
-        # one straggler halves the stage). Size splits so each batch's scan
-        # yields ≥ 3 task waves per core — the same knob a 100-TB job turns
-        # when a Pandas-UDF/feature-extract stage dominates per-byte cost.
-        total_b = sum(
-            os.path.getsize(os.path.join(dp, fn))
-            for dp, _dns, fns in os.walk(args.events)
-            for fn in fns
-            if fn.endswith(".parquet")
-        )
-        split = max(131072, total_b // args.n_batches // (args.cores * 3))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        spark.conf.set("spark.sql.files.openCostInBytes", "131072")
 
     events = spark.read.parquet(args.events)
     n_events = events.count()
@@ -145,140 +51,41 @@ def main() -> None:
     ckpt = Checkpoint(os.path.join(args.workdir, "ckpt.json"))
 
     def provider(b: int):
-        # partition pruning on batch_id=<b> subdirectory
-        df = events.where(F.col("batch_id") == b)
-        # normalize stage: content sha + deterministic row id (vectorized);
-        # sha_rounds>1 = CPU-roofline experiment (see chained_sha)
-        return df.withColumn(
-            "content_sha", chained_sha(F.col("content"), args.sha_rounds, args.sha_mode)
-        ).withColumn(
-            "row_key", F.sha2(F.concat_ws("|", "repo", "path"), 256)
+        # partition pruning on batch_id=<b>; normalize stage: content sha +
+        # deterministic row id
+        return (
+            events.where(F.col("batch_id") == b)
+            .withColumn("content_sha", F.sha2(F.col("content"), 256))
+            .withColumn("row_key", F.sha2(F.concat_ws("|", "repo", "path"), 256))
         )
 
-    # Steady-state warm-up, untimed: run a full (tiny) merge for BOTH plan
-    # shapes — pre- and post-schema-evolution — into a throwaway table.
-    # A continuously-running ingest compiles each plan shape ONCE per
-    # schema change, not once per batch; 10^10-event steady-state
-    # throughput therefore excludes whole-stage-codegen compilation, the
-    # parquet writer's first-use init, and the first Py4J plan round-trip,
-    # exactly as the headline queries are warmed before timing. 512 rows
-    # spread over all buckets exercises the wide-batch path (exchange ==
-    # bucket layout) the real batches take.
-    warm = SnapshotTable(
-        spark, os.path.join(args.workdir, "warm_tbl"), n_buckets=args.n_buckets
-    )
+    # Untimed warm-up: one small merge per plan shape (before and after the
+    # log's schema change) into a throwaway table, so the timed replay
+    # measures steady-state ingest, not codegen and first-use init.
+    warm_dir = os.path.join(args.workdir, "warm_tbl")
+    warm = SnapshotTable(spark, warm_dir, n_buckets=args.n_buckets)
     for b in (0, args.n_batches - 1):
         warm.merge(provider(b).limit(512), batch_id=f"warm-{b}")
-    shutil.rmtree(os.path.join(args.workdir, "warm_tbl"), ignore_errors=True)
+    shutil.rmtree(warm_dir, ignore_errors=True)
 
-    if args.sha_rounds > 1:
-        # warm the MAP-stage codegen/JIT on EVERY executor: the 512-row
-        # warm merges collapse to ~1 scan task (limit pushdown), so on a
-        # 4-executor level up to 3 executors would C2-compile the sha
-        # chain inside the first TIMED batch. cores*8 single-row range
-        # partitions round-robin across all executors.
-        n = args.cores * 8
-        spark.range(0, n, 1, n).select(
-            chained_sha(
-                F.concat(F.lit("warm"), F.col("id").cast("string")),
-                min(args.sha_rounds, 256),
-                args.sha_mode,
-            ).alias("s")
-        ).agg(F.count("s")).collect()
-
-    def _cpu_snap() -> list[int] | None:
-        # VM-scoped /proc/stat jiffies (user nice system idle iowait irq
-        # softirq steal). Snapped around EXACTLY the timed section so JVM
-        # startup/codegen is excluded; with the box otherwise idle, the
-        # busy delta is the replay's own delivered CPU — the denominator
-        # of the per-window eff-vs-delivered-CPU scaling metric.
-        try:
-            with open("/proc/stat") as f:
-                return list(map(int, f.readline().split()[1:9]))
-        except (OSError, ValueError):
-            return None
-
-    s0 = _cpu_snap()
     t0 = time.time()
-    res = replay(tbl, ckpt, provider, range(args.n_batches), collect_partition_lineage=False)
+    res = replay(tbl, ckpt, provider, range(args.n_batches))
     wall = time.time() - t0
-    s1 = _cpu_snap()
-
-    cpu: dict = {}
-    if s0 and s1:
-        hz = os.sysconf("SC_CLK_TCK")
-        busy = sum(s1[i] - s0[i] for i in (0, 1, 2, 5, 6)) / hz
-        steal = (s1[7] - s0[7]) / hz
-        cpu = {
-            "busy_cpu_sec": round(busy, 1),
-            "steal_cpu_sec": round(steal, 1),
-            "busy_cores": round(busy / wall, 2),
-            "steal_cores": round(steal / wall, 2),
-            "events_per_cpu_sec": round(n_events / max(busy, 1e-6), 1),
-        }
 
     out = {
-        **cpu,
         "cores": args.cores,
         "events": n_events,
-        "sha_rounds": args.sha_rounds,
-        "sha_mode": args.sha_mode,
         "batches": args.n_batches,
         "wall_sec": round(wall, 3),
         "events_per_sec": round(n_events / wall, 1),
         "final_rows": tbl.read().count(),
         "snapshots": len(tbl.snapshots()),
-        # per-batch phase profile (stats job / fused apply / manifest
-        # commit) — pins which phase stops scaling with cores
+        # per-batch phase profile (stats job / fused apply / manifest commit)
         "batch_phase_ms": [s.phase_ms for s in res.stats],
     }
-    if want_stage_metrics:
-        out["stage_metrics"] = _stage_metrics(spark)
-        out["task_skew"] = task_skew_metrics(spark)
     with open(args.out, "w") as f:
         json.dump(out, f)
     spark.stop()
-
-
-def _stage_metrics(spark) -> list[dict]:
-    """Per-stage metric dump from the driver's status REST API, sorted by
-    executorRunTime desc. CPU figures are JVM task-thread time (ns→ms), so
-    (sum executorCpuTime)/events is per-event CPU *excluding* GC pauses and
-    scheduler gaps — comparing it across 1-executor and 4-executor levels
-    separates plan overhead from host effects."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.load(r)
-    except Exception as e:  # noqa: BLE001 — instrumentation must not fail the run
-        return [{"error": repr(e)[:200]}]
-    keep = (
-        "stageId", "attemptId", "name", "numTasks", "numCompleteTasks",
-        "executorRunTime", "executorCpuTime", "executorDeserializeTime",
-        "executorDeserializeCpuTime", "jvmGcTime", "resultSerializationTime",
-        "shuffleFetchWaitTime", "shuffleWriteTime", "shuffleRemoteBytesRead",
-        "shuffleLocalBytesRead", "shuffleWriteBytes", "inputBytes",
-        "inputRecords", "outputBytes", "outputRecords",
-        "submissionTime", "completionTime",
-    )
-    rows = []
-    for s in stages:
-        row = {k: s.get(k) for k in keep if k in s}
-        # ns → ms for the cpu counters so all times share a unit
-        for k in ("executorCpuTime", "executorDeserializeCpuTime",
-                  "shuffleWriteTime"):
-            if row.get(k) is not None:
-                row[k] = round(row[k] / 1e6, 1)
-        row["name"] = (row.get("name") or "")[:80]
-        rows.append(row)
-    rows.sort(key=lambda r: -(r.get("executorRunTime") or 0))
-    return rows
 
 
 def task_skew_metrics(spark, top_n: int = 3) -> list[dict]:
@@ -288,8 +95,7 @@ def task_skew_metrics(spark, top_n: int = 3) -> list[dict]:
     ``max_over_median`` is THE straggler metric: a hot key that defeats
     the map-side combine / salting / AQE skew handling shows up as one
     task holding the stage hostage (ratio >> 1 on the reduce stage). The
-    driver UI must be on (``SPARK_GRAFT_STAGE_METRICS=1`` /
-    ``spark.ui.enabled=true``)."""
+    session must run with ``spark.ui.enabled=true``."""
     import urllib.request
 
     ui = spark.sparkContext.uiWebUrl

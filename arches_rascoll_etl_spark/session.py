@@ -10,6 +10,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_GIB = 16
+
+
+def mem_total_kib(meminfo: str = "/proc/meminfo") -> int | None:
+    """The host's MemTotal in KiB, or None when it cannot be read."""
+    try:
+        with open(meminfo) as f:
+            return next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return None
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap sized to the host: half of MemTotal, rounded to whole
+    GiB and capped at 16g, so a local-mode driver leaves the other half to
+    the off-heap, Python-worker and page-cache memory it also uses. Falls
+    back to the cap when MemTotal is unreadable."""
+    kib = mem_total_kib(meminfo)
+    if kib is None:
+        return f"{_MAX_DRIVER_GIB}g"
+    gib = round(kib / 2 / (1 << 20))
+    return f"{max(1, min(gib, _MAX_DRIVER_GIB))}g"
+
 
 def get_spark(
     app_name: str = "arches_rascoll_etl_spark",
@@ -41,6 +64,7 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             pkg_root + (os.pathsep + env_pp if env_pp else "")
         )
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -51,7 +75,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # deterministic parquet output (no summary files, stable committer)
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
     builder = builder.config(

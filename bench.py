@@ -1,172 +1,38 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""Benchmark harness: the 13-query headline plus one replay pair.
 
-Phase 1 — headline operator queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; execution is forced with
-the noop sink (no driver collect skew).
+Headline — each ``HEADLINE`` query over the test data at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 set) on local[$SPARK_GRAFT_CPUS] (default: nproc), run
+once to warm codegen and the scan cache, then timed; execution is forced with
+the noop sink (no driver collect).
 
-Phase 2 — north-rule scaling evidence: the CDC replay job (binlog replay →
-lake upsert) over one deterministic synthetic change log, run in two fresh
-JVMs at local[N] and local[4N] (N=8) on identical input files; reports
-events/sec at both and the scaling efficiency (speedup / 4). Written to
-BENCH/BASELINE.md as well.
+Replay pair — one 1M-event synthetic change log replayed by
+``python -m arches_rascoll_etl_spark.replay_bench`` in two fresh JVMs, at
+local[max(1, CPUS // 4)] and local[CPUS], over identical input files. The
+pair is unpinned: it reports what this host grants, not a cluster scaling
+proof.
 
 Prints ONE JSON line:
-  {"metric": ..., "value": <total headline sec>, "unit": "sec",
-   "queries": {...}, "sf": ..., "cdc_scaling": {...}}
+  {"metric": "headline_total", "value": <sec>, "unit": "sec",
+   "queries": {...}, "sf": ..., "replay_pair": {...}, "host": {...}}
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
 import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, ROOT)
 
+NPROC = len(os.sched_getaffinity(0))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-CDC_EVENTS = int(os.environ.get("SPARK_GRAFT_CDC_EVENTS", "8000000"))
-# N vs 4N parallelism pair for the scaling evidence. Defaults to 4→16 so
-# BOTH levels fit in the host's actually-granted capacity: this sandbox's
-# hypervisor reports steal spikes up to ~20% and grants ~2.2-2.8× the
-# 8-core throughput to 32 procs, so 32-thread runs get descheduled in waves
-# and measure the neighbors, not the engine. 4→16 is the same 4× ratio on
-# honest ground; override with SPARK_GRAFT_SCALE_LO/HI.
-SCALE_LO = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "4"))
-SCALE_HI = int(os.environ.get("SPARK_GRAFT_SCALE_HI", "16"))
-SCALE_RUNS = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "3"))
-# hard per-replay-run subprocess timeout and whole-scaling-phase wall budget:
-# a degraded host must cost us accuracy, never the round's entire bench (the
-# r2 driver run was killed at ITS timeout mid-scaling and every number,
-# including the already-finished headline, was lost with it)
-RUN_TIMEOUT_S = float(os.environ.get("SPARK_GRAFT_RUN_TIMEOUT_S", "900"))
-SCALING_BUDGET_S = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET_S", "1800"))
-# real standalone-cluster pair (1 executor vs 4 executor JVMs) after the
-# local[k] phase; "0" disables
-STANDALONE = os.environ.get("SPARK_GRAFT_STANDALONE", "1") != "0"
-# 2 cores/worker: the hi level (4 executors = 8 cores) then fits in 8 of
-# the box's 32 vCPUs, so the hypervisor can physically grant 4x the lo
-# level's resources — at 4 cores/worker the 16-core hi level collides with
-# SMT-sibling contention and hypervisor credit caps that no plan can dodge
-# (measured: cpw=2 fold window speedup 2.99 with steal≈0 in the same hour
-# cpw=4 windows read 1.2-1.6). Executor size is constant across both
-# levels, so the pair remains exactly the north rule's N vs 4N executors.
-STANDALONE_CORES_PER_WORKER = int(os.environ.get("SPARK_GRAFT_STANDALONE_CPW", "2"))
-
-# fast local dirs for shuffle + bench tables (single-node disk is the first
-# artificial bottleneck when emulating a cluster in one box)
-if os.path.isdir("/dev/shm"):
-    os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark_graft_local")
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-
-
-
-def _median(xs) -> float:
-    """True median (interpolated for even counts). The previous
-    upper-middle shortcut (xs[n//2]) over-states an even-count cohort's
-    median — e.g. [0.35, 0.47, 0.82, 1.0] reads 0.82 instead of 0.645."""
-    xs = sorted(xs)
-    n = len(xs)
-    if n == 0:
-        return float("nan")
-    mid = xs[n // 2] if n % 2 else (xs[n // 2 - 1] + xs[n // 2]) / 2
-    return round(float(mid), 3)
-
-
-def _modal_config(windows: list[dict]) -> list[dict]:
-    """The windows of the most-populous (sha_rounds, events) config.
-
-    A cohort median only compares like with like when every window ran the
-    IDENTICAL job; mixing e.g. a 75k-event short-wall experiment (serial
-    floor dominates) with the 150k-event main config skews the median with
-    a workload difference, not a host or plan difference. Selection is by
-    window COUNT (outcome-blind) — never by score.
-    """
-    from collections import Counter
-
-    if not windows:
-        return []
-    key = lambda w: (w.get("sha_rounds"), w.get("events"))  # noqa: E731
-    modal = Counter(key(w) for w in windows).most_common(1)[0][0]
-    return [w for w in windows if key(w) == modal]
-
-
-def _burn(seconds: float) -> int:
-    # module-level so multiprocessing can pickle it under any start method
-    import hashlib
-
-    data = b"x" * 65536
-    t = time.time()
-    n = 0
-    while time.time() - t < seconds:
-        hashlib.sha256(data).digest()
-        n += 1
-    return n
-
-
-def _burn_touch(seconds: float) -> int:
-    """Bytes/sec of FIRST-TOUCH writes to fresh anonymous mmap pages.
-
-    Round-3 finding: this sandbox's hypervisor can degrade the fresh-page
-    write path ~100× (observed: a 400 MB numpy allocation+store taking 28 s)
-    while SHA-NI hashing stays at full speed — so a sha256-only probe reads
-    "healthy" on a host where an allocation-heavy JVM runs 15× slow. One
-    byte per 4 KiB page exercises exactly the page-allocation path."""
-    import mmap
-
-    size = 16 * 1024 * 1024
-    t = time.time()
-    touched = 0
-    while time.time() - t < seconds:
-        m = mmap.mmap(-1, size)
-        for off in range(0, size, 4096):
-            m[off] = 1
-            touched += 4096
-        m.close()
-    return touched
-
-
-def _burn_bw(seconds: float) -> int:
-    import numpy as np
-
-    src = np.ones(64 * 1024 * 1024, dtype=np.uint8)
-    dst = np.empty_like(src)
-    t = time.time()
-    n = 0
-    while time.time() - t < seconds:
-        np.copyto(dst, src)
-        n += 1
-    return n * src.nbytes
-
-
-def calibrate_host_scaling(n_lo: int = 8, n_hi: int = 32, seconds: float = 3.0) -> dict:
-    """Measure the host's TWO scaling ceilings with multiprocess burns:
-
-    * CPU (sha256): how much more compute n_hi procs get than n_lo.
-    * Memory bandwidth (64MB memcpy): single-box DRAM saturates long before
-      the core count — measured here ~33 GB/s at 4 procs vs ~45 GB/s at 16
-      (1.36×). A shuffle/scan/write job is a CPU+bandwidth mix, so its
-      achievable single-box speedup sits BETWEEN the two ceilings; on a real
-      N→4N-node cluster both CPU and bandwidth multiply with nodes, so the
-      single-box measurement lower-bounds true cluster scaling.
-    """
-    import multiprocessing as mp
-
-    out = {"procs": [n_lo, n_hi]}
-    for name, fn in (("cpu", _burn), ("bandwidth", _burn_bw)):
-        totals = {}
-        for n in (n_lo, n_hi):
-            with mp.Pool(n) as p:
-                totals[n] = sum(p.map(fn, [seconds] * n))
-        out[f"{name}_ceiling_speedup"] = round(totals[n_hi] / totals[n_lo], 3)
-    out["ceiling_speedup"] = out["cpu_ceiling_speedup"]
-    return out
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or NPROC)
+PAIR_EVENTS = 1_000_000
+RUN_TIMEOUT_S = 1800
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -185,231 +51,27 @@ HEADLINE = [
 ]
 
 
-def run_bucket_scaling() -> dict:
-    """Bucket-count realism at production-ish layout (n_buckets=512): a
-    merge's rewrite cost must track the buckets it TOUCHES, not the table
-    size. Loads a base snapshot, then times a batch updating keys in ~every
-    bucket vs a batch updating ~a dozen keys; reports wall ms and
-    touched-bucket counts for BENCH/BASELINE.md."""
-    from pyspark.sql import functions as F
-
-    from arches_rascoll_etl_spark.lake.parquet_snapshot import SnapshotTable
-    from arches_rascoll_etl_spark.session import get_spark
-    from arches_rascoll_etl_spark.synth import ChangeLogConfig, change_log
-
-    tmp = tempfile.mkdtemp(
-        prefix="bucket_bench_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    spark = get_spark(app_name="bench-buckets", cores=CPUS, shuffle_partitions=max(CPUS, 16))
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        cfg = ChangeLogConfig(
-            n_events=1_000_000, n_repos=50, paths_per_repo=5000,
-            hot_fraction=0.1, n_batches=2, schema_add_batch=0,
-        )
-        tbl = SnapshotTable(spark, os.path.join(tmp, "tbl"), n_buckets=512)
-        # materialize the log first: the merges must measure MERGE cost
-        # (scan + LWW + bucket rewrite), not synthetic-log regeneration
-        ev_path = os.path.join(tmp, "events")
-        change_log(spark, cfg).write.partitionBy("batch_id").parquet(ev_path)
-        ev = spark.read.parquet(ev_path)
-        tbl.merge(ev.where(F.col("batch_id") == 0).drop("batch_id"), batch_id="base")
-        st_wide = tbl.merge(ev.where(F.col("batch_id") == 1).drop("batch_id"), batch_id="wide")
-        narrow = ev.where(
-            (F.col("batch_id") == 1)
-            & (F.col("repo") == "org/repo_00001")
-            & (F.pmod(F.xxhash64("path"), F.lit(500)) == 0)
-        ).drop("batch_id")
-        st_narrow = tbl.merge(narrow, batch_id="narrow")
-
-        # MOR-vs-COW on a SCATTERED update (few rows, many buckets — COW's
-        # worst case, MOR's best): same-size samples from batch 1, distinct
-        # pmod residues so neither merge is a dedup no-op of the other.
-        # Bytes = data files the commit added (manifest diff), the actual
-        # write amplification a 100-TB operator pays per scattered batch.
-        def _commit_bytes(version: int) -> int:
-            m_new = tbl._load_manifest(version)
-            m_old = tbl._load_manifest(m_new["parent_version"])
-            old_refs = {f for fl in m_old["files"].values() for f in fl} | {
-                f for fl in tbl._delta_map(m_old).values() for f in fl
-            }
-            new_refs = {f for fl in m_new["files"].values() for f in fl} | {
-                f for fl in tbl._delta_map(m_new).values() for f in fl
-            }
-            return sum(
-                os.path.getsize(os.path.join(tbl.path, f))
-                for f in new_refs - old_refs
-            )
-
-        def _scatter(residue: int):
-            return ev.where(
-                (F.col("batch_id") == 1)
-                & (F.pmod(F.xxhash64("path"), F.lit(997)) == residue)
-            ).drop("batch_id")
-
-        st_sc_cow = tbl.merge(_scatter(1), batch_id="scatter_cow")
-        cow_bytes = _commit_bytes(st_sc_cow.snapshot_version)
-        st_sc_mor = tbl.merge(_scatter(2), batch_id="scatter_mor", mode="mor")
-        mor_bytes = _commit_bytes(st_sc_mor.snapshot_version)
-        return {
-            "n_buckets": 512,
-            "wide_rows_in": st_wide.rows_in,
-            "wide_touched_buckets": len(st_wide.affected_buckets),
-            "wide_wall_ms": round(st_wide.wall_ms, 1),
-            "narrow_rows_in": st_narrow.rows_in,
-            "narrow_touched_buckets": len(st_narrow.affected_buckets),
-            "narrow_wall_ms": round(st_narrow.wall_ms, 1),
-            "narrow_over_wide_wall": round(st_narrow.wall_ms / max(st_wide.wall_ms, 1), 3),
-            "scatter_rows_in": st_sc_mor.rows_in,
-            "scatter_touched_buckets": len(st_sc_mor.affected_buckets),
-            "scatter_cow_wall_ms": round(st_sc_cow.wall_ms, 1),
-            "scatter_mor_wall_ms": round(st_sc_mor.wall_ms, 1),
-            "scatter_cow_bytes": cow_bytes,
-            "scatter_mor_bytes": mor_bytes,
-            "scatter_mor_over_cow_bytes": round(mor_bytes / max(cow_bytes, 1), 4),
-        }
-    finally:
-        spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _sf_label(path: str) -> float | str:
-    base = os.path.basename(path.rstrip("/"))
-    return float(base[2:]) if base.startswith("sf") else base
-
-
-SKEW_EVENTS = int(os.environ.get("SPARK_GRAFT_SKEW_EVENTS", "2000000"))
-
-
-def run_skew_replay(tmp: str) -> dict:
-    """Adversarial hot-key replay — the north_star names hot-repo salting
-    as a required skew defense, and until this phase the bench only ever
-    replayed a mildly-skewed (hot_fraction=0.3) log.
-
-    Two logs, identical in every dimension (events, repos, key space,
-    batches) EXCEPT skew: ``uniform`` (hot_fraction=0 — events spread over
-    all repos) and ``skewed`` (ONE repo carries 50% of all events, and with
-    500 paths/repo its keys run ~2000 events each vs ~40 uniform — key-level
-    heat, not just repo-level). Each log replays through the full CDC merge
-    at local[SCALE_LO] and local[SCALE_HI] in fresh JVMs with stage metrics
-    on. Reported:
-
-    * ``skew_over_uniform_{lo,hi}`` — wall-time ratio; ≈1.0 means the
-      map-side LWW combine + bucket-hash exchange absorb the hot keys.
-    * ``task_straggler_{...}`` — max/median task duration of the heaviest
-      stage (status-API taskSummary): THE straggler metric; a hot key that
-      defeated the combine shows one task holding the stage hostage.
-    """
-    cfg_common = dict(n_events=SKEW_EVENTS, n_repos=100, paths_per_repo=500,
-                      n_batches=4, schema_add_batch=2)
-
-    def _gen(path: str, hot: float) -> None:
-        from pyspark.sql import functions as F
-
-        from arches_rascoll_etl_spark.session import get_spark
-        from arches_rascoll_etl_spark.synth import ChangeLogConfig, change_log
-
-        spark = get_spark(app_name="bench-gen-skew", cores=CPUS,
-                          shuffle_partitions=max(CPUS, 16))
-        spark.sparkContext.setLogLevel("ERROR")
-        (
-            change_log(spark, ChangeLogConfig(hot_fraction=hot, **cfg_common))
-            .repartition(max(CPUS, 16), F.col("repo"), F.col("path"))
-            .write.partitionBy("batch_id").mode("overwrite").parquet(path)
-        )
-        spark.stop()
-
-    def _one(events_path: str, cores: int, tag: str) -> dict | None:
-        out_f = os.path.join(tmp, f"skewrep_{tag}_{cores}.json")
-        wh = os.path.join("/dev/shm" if os.path.isdir("/dev/shm") else tmp,
-                          f"spark_graft_skew_wh_{tag}_{cores}")
-        env = dict(os.environ,
-                   SPARK_GRAFT_DRIVER_MEM=os.environ.get("SPARK_GRAFT_REPLAY_MEM", "12g"),
-                   SPARK_GRAFT_STAGE_METRICS="1")
-        try:
-            subprocess.run(
-                [sys.executable, "-m", "arches_rascoll_etl_spark.replay_bench",
-                 "--cores", str(cores), "--events", events_path,
-                 "--workdir", wh, "--out", out_f],
-                cwd=ROOT, check=True, timeout=RUN_TIMEOUT_S, env=env,
-                stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-            )
-        except (subprocess.TimeoutExpired, subprocess.CalledProcessError) as e:
-            return {"failed": type(e).__name__}
-        finally:
-            shutil.rmtree(wh, ignore_errors=True)
-        with open(out_f) as f:
-            r = json.load(f)
-        skew_rows = [s for s in r.get("task_skew", [])
-                     if isinstance(s.get("max_over_median"), (int, float))]
-        # straggler verdict from stages whose tasks are heavy enough to
-        # measure (sub-100ms medians make max/median scheduler noise, not
-        # skew — observed 7.5x on a 77ms-median scan stage on a loaded box)
-        signal = [s for s in skew_rows
-                  if (s.get("task_ms_median") or 0) >= 100
-                  and (s.get("numTasks") or 0) >= 8]
-        worst = max((s["max_over_median"] for s in signal), default=None)
-        return {"wall_sec": r["wall_sec"], "events_per_sec": r["events_per_sec"],
-                "final_rows": r["final_rows"],
-                "task_straggler_max_over_median": worst,
-                "task_skew_stages": skew_rows[:3]}
-
-    res: dict = {"events": SKEW_EVENTS, "cores_lo": SCALE_LO, "cores_hi": SCALE_HI,
-                 "hot_fraction_skewed": 0.5, "n_repos": cfg_common["n_repos"],
-                 "paths_per_repo": cfg_common["paths_per_repo"]}
-    try:
-        paths = {}
-        for tag, hot in (("uniform", 0.0), ("skewed", 0.5)):
-            p = os.path.join(tmp, f"events_{tag}")
-            _gen(p, hot)
-            paths[tag] = p
-        for tag in ("uniform", "skewed"):
-            for level, cores in (("lo", SCALE_LO), ("hi", SCALE_HI)):
-                r = _one(paths[tag], cores, tag)
-                res[f"{tag}_{level}"] = r
-        for level in ("lo", "hi"):
-            u, s = res.get(f"uniform_{level}"), res.get(f"skewed_{level}")
-            if u and s and u.get("wall_sec") and s.get("wall_sec"):
-                res[f"skew_over_uniform_{level}"] = round(
-                    s["wall_sec"] / u["wall_sec"], 3)
-    except Exception as e:  # noqa: BLE001 — phase must never kill the bench
-        res["failed"] = repr(e)[:300]
-    return res
-
-
-def run_headline() -> dict[str, float]:
+def run_headline(spark) -> dict[str, float]:
     from arches_rascoll_etl_spark import queries as Q
-    from arches_rascoll_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="bench-headline", cores=CPUS, shuffle_partitions=max(CPUS, 16))
-    spark.sparkContext.setLogLevel("ERROR")
     qs = Q.all_queries()
     times: dict[str, float] = {}
     for name in HEADLINE:
-        df = qs[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()  # warm (codegen+scan cache)
+        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
         t0 = time.time()
         qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
         times[name] = round(time.time() - t0, 3)
-    spark.stop()
     return times
 
 
-def gen_cdc_input(path: str, n_events: int = CDC_EVENTS) -> None:
+def gen_change_log(spark, path: str) -> None:
     from pyspark.sql import functions as F
 
-    from arches_rascoll_etl_spark.session import get_spark
     from arches_rascoll_etl_spark.synth import ChangeLogConfig, change_log
 
-    spark = get_spark(app_name="bench-gen", cores=CPUS, shuffle_partitions=max(CPUS, 16))
-    spark.sparkContext.setLogLevel("ERROR")
     cfg = ChangeLogConfig(
-        n_events=n_events,
-        n_repos=200,
-        paths_per_repo=5000,
-        hot_fraction=0.3,
-        n_batches=4,
-        schema_add_batch=2,
+        n_events=PAIR_EVENTS, n_repos=200, paths_per_repo=5000,
+        hot_fraction=0.3, n_batches=4, schema_add_batch=2,
     )
     (
         change_log(spark, cfg)
@@ -418,1544 +80,66 @@ def gen_cdc_input(path: str, n_events: int = CDC_EVENTS) -> None:
         .mode("overwrite")
         .parquet(path)
     )
-    spark.stop()
 
 
-class _CpuSampler:
-    """Samples /proc/stat in a thread; reports mean steal%/idle% over a run —
-    the honesty metadata for every scaling number on this shared host."""
-
-    def __init__(self):
-        import threading
-
-        self._stop = threading.Event()
-        self._samples: list[tuple[float, float]] = []
-        self._thread = threading.Thread(target=self._run, daemon=True)
-
-    @staticmethod
-    def _snap():
-        with open("/proc/stat") as f:
-            return [int(x) for x in f.readline().split()[1:]]
-
-    def _run(self):
-        prev = self._snap()
-        while not self._stop.wait(2.0):
-            cur = self._snap()
-            d = [b - a for a, b in zip(prev, cur)]
-            prev = cur
-            tot = sum(d) or 1
-            self._samples.append((100 * d[7] / tot, 100 * d[3] / tot))
-
-    def __enter__(self):
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self._stop.set()
-        self._thread.join(timeout=5)
-
-    def stats(self) -> dict:
-        if not self._samples:
-            return {"steal_pct_mean": 0.0, "idle_pct_mean": 0.0}
-        st = [s for s, _ in self._samples]
-        idl = [i for _, i in self._samples]
-        return {
-            "steal_pct_mean": round(sum(st) / len(st), 1),
-            "steal_pct_max": round(max(st), 1),
-            "idle_pct_mean": round(sum(idl) / len(idl), 1),
-        }
-
-
-def _grant_probe(n_procs: int = 4, seconds: float = 2.0) -> dict:
-    """Instantaneous host-grant index along TWO independent axes:
-
-    * ``sha``      — sha256 hashes/sec over n_procs procs (core arithmetic)
-    * ``memtouch`` — fresh-page first-touch bytes/sec (page allocation)
-
-    The hypervisor degrades these *independently* (observed: memtouch down
-    ~100× with sha untouched, and vice-versa lesser swings), and Spark's
-    allocation-heavy JVM tracks the WORST of them. The absolute values are
-    meaningless; ratios between probes of the same component tell whether
-    the grant moved between them (see ``_probe_drift``)."""
-    import multiprocessing as mp
-
-    with mp.Pool(n_procs) as p:
-        sha = sum(p.map(_burn, [seconds] * n_procs))
-        touch = sum(p.map(_burn_touch, [seconds] * n_procs))
-    return {"sha": sha / seconds, "memtouch": touch / seconds}
-
-
-def _probe_drift(probes: list[dict]) -> float:
-    """Worst per-component max/min ratio across a list of grant probes —
-    the pair-validity drift: if EITHER capacity axis moved, the bracketed
-    lo/hi runs executed on effectively different machines."""
-    drift = 1.0
-    for k in ("sha", "memtouch"):
-        vals = [p[k] for p in probes if isinstance(p, dict) and p.get(k)]
-        if len(vals) >= 2:
-            drift = max(drift, max(vals) / max(min(vals), 1.0))
-    return drift
-
-
-def _history_medians() -> dict[str, float | None]:
-    """Median grant-probe values across past windows
-    (BENCH/scaling_history.jsonl) per capacity axis; None without history."""
-    hist_path = os.path.join(ROOT, "BENCH", "scaling_history.jsonl")
-    past: dict[str, list[float]] = {"sha": [], "memtouch": []}
-    if os.path.exists(hist_path):
-        with open(hist_path) as f:
-            for line in f:
-                if line.strip():
-                    rec = json.loads(line)
-                    v = rec.get("grant_probe_abs")
-                    if v:
-                        past["sha"].append(v)
-                    v = rec.get("grant_probe_memtouch_abs")
-                    if v:
-                        past["memtouch"].append(v)
-    return {k: (sorted(v)[len(v) // 2] if v else None) for k, v in past.items()}
-
-
-def _grant_rel(probe: dict, med: dict) -> float | None:
-    """Current grant vs history, worst axis (Spark tracks the most-degraded
-    of core arithmetic and page allocation); None without history."""
-    rels = [probe[k] / med[k] for k in ("sha", "memtouch") if med.get(k)]
-    return min(rels) if rels else None
-
-
-def gate_headline() -> dict:
-    """Wait (bounded) for a healthy-grant window before timing the headline
-    queries, and record how healthy the window actually was.
-
-    r3 postmortem: the headline ran while the host grant sat at 0.26× its
-    historical median, so q01/q02/q33 'regressions' vs r1 could not be
-    attributed to code at all. The scaling phase already gates on the same
-    probe; the headline now does too, and the measured
-    ``grant_probe_vs_median`` lands next to the query times (stdout +
-    BASELINE.md) so cross-round comparisons carry their own health flag."""
-    med = _history_medians()
-    budget = float(os.environ.get("SPARK_GRAFT_HEADLINE_WAIT_S", "420"))
-    target = float(os.environ.get("SPARK_GRAFT_HEADLINE_MIN_GRANT", "0.9"))
-    memtouch_floor = float(os.environ.get("SPARK_GRAFT_MEMTOUCH_FLOOR", "2e8"))
-    waited = 0.0
-    probe = _grant_probe()
-    rel = _grant_rel(probe, med)
-    while ((rel is not None and rel < target) or probe["memtouch"] < memtouch_floor) and waited < budget:
-        time.sleep(30)
-        waited += 30
-        probe = _grant_probe()
-        rel = _grant_rel(probe, med)
-    return {
-        "headline_grant_probe_vs_median": round(rel, 3) if rel is not None else None,
-        "headline_grant_waited_s": waited,
-        "headline_memtouch_collapsed": bool(probe["memtouch"] < memtouch_floor),
-    }
-
-
-def _gate_cdc_events() -> tuple[int, dict]:
-    """Decide the CDC event count from the host's CURRENT grant.
-
-    Probes multiprocess sha256 throughput and compares it with the median
-    probe of past windows (BENCH/scaling_history.jsonl — entries carry
-    ``grant_probe_abs`` from this round on). On a collapsed host (< 0.3×
-    the historical median) a full 8M-event scaling phase measures nothing
-    except the driver's timeout, so the phase runs at 2M events instead and
-    says so in the output. With no probe history yet the full count runs."""
-    probe = _grant_probe()
-    med = _history_medians()
-    info: dict = {
-        "grant_probe_abs": round(probe["sha"], 1),
-        "grant_probe_memtouch_abs": round(probe["memtouch"], 1),
-    }
-
-    # the most-degraded axis governs: Spark tracks the worst of core
-    # arithmetic and page-allocation throughput
-    def _rels_from(p: dict) -> list[float]:
-        rels = []
-        for key in ("sha", "memtouch"):
-            if med[key]:
-                rels.append(p[key] / med[key])
-                info[f"grant_probe_{key}_history_median"] = round(med[key], 1)
-        return rels
-
-    rels = _rels_from(probe)
-    # bounded wait-for-health: the page-allocation collapse arrives in
-    # bursts (observed: minutes-long windows of ~3 MB/s memtouch against a
-    # multi-GB/s healthy baseline — a 1000x swing, so an ABSOLUTE floor
-    # separates the modes cleanly where a history median would be poisoned
-    # by past degraded windows). Starting an 8M-event scaling phase inside
-    # a burst measures nothing and burns the whole phase budget; re-probe
-    # for up to WAIT_FOR_HEALTH_S, then proceed regardless (scaled down)
-    # so a permanently sick host still yields a report.
-    wait_budget = float(os.environ.get("SPARK_GRAFT_WAIT_FOR_HEALTH_S", "480"))
-    memtouch_floor = float(os.environ.get("SPARK_GRAFT_MEMTOUCH_FLOOR", "2e8"))
-    waited = 0.0
-    while probe["memtouch"] < memtouch_floor and waited < wait_budget:
-        time.sleep(60)
-        waited += 60
-        probe = _grant_probe()
-    if waited:
-        info["waited_for_health_s"] = waited
-        info["grant_probe_abs"] = round(probe["sha"], 1)
-        info["grant_probe_memtouch_abs"] = round(probe["memtouch"], 1)
-        # recompute EVERY rel from the fresh post-wait probe (ADVICE r3:
-        # slicing the pre-wait list could keep a stale memtouch rel when
-        # sha history was empty, basing the downscale decision and the
-        # reported grant_probe_vs_median on a probe taken before recovery)
-        rels = _rels_from(probe)
-    info["memtouch_collapsed"] = bool(probe["memtouch"] < memtouch_floor)
-
-    events = CDC_EVENTS
-    if rels:
-        rel = min(rels)
-        info["grant_probe_vs_median"] = round(rel, 3)
-    else:
-        rel = None
-    if (rel is not None and rel < 0.3) or info["memtouch_collapsed"]:
-        events = min(CDC_EVENTS, 2_000_000)
-        info["events_scaled_down"] = True
-        info["events_scaled_down_reason"] = (
-            "page-allocation path collapsed (memtouch "
-            f"{probe['memtouch'] / 1e6:.1f} MB/s < floor) — "
-            if info["memtouch_collapsed"]
-            else f"host grant probe at {rel:.2f}x the historical median — "
-        ) + (
-            "a full-size scaling phase on a collapsed grant measures only "
-            "the driver timeout"
-        )
-    return events, info
-
-
-def run_cdc_scaling(events_path: str, tmp: str, on_pair=None, gate_info: dict | None = None) -> dict:
-    """Scaling measurement as VALIDATED lo/hi pairs.
-
-    The sandbox host's granted capacity can swing an order of magnitude
-    within one bench (observed: identical local[4] runs of 77s and 1247s
-    in the same window). A best-of-per-level scheme then pairs a lucky lo
-    run with an unlucky hi run and reports a physically impossible
-    "slowdown on 4x cores". Instead: each round runs lo then hi
-    back-to-back, BRACKETED by short grant probes. A pair is VALID iff
-    the grant drifted < ``_PAIR_DRIFT_MAX`` across it and its speedup is
-    physically sane (within (1/ratio, ratio*1.1)). The headline is the
-    MEDIAN valid pair — never the best — and an all-invalid window says
-    so explicitly rather than reporting noise as capability.
-
-    Resilience (r2 postmortem — a driver timeout mid-scaling erased the
-    round's numbers): every replay subprocess carries a hard
-    ``RUN_TIMEOUT_S`` kill, the whole phase stops starting new pairs past
-    ``SCALING_BUDGET_S``, and ``on_pair`` (if given) is invoked after every
-    completed pair so the caller can flush partial results."""
-    lo, hi = SCALE_LO, SCALE_HI
-    ratio = hi / lo
-    runs_meta: list[dict] = []
-    pairs: list[dict] = []
-    phase_t0 = time.time()
-    skipped_pairs = 0
-
-    def one_run(cores: int, i: int) -> dict | None:
-        out = os.path.join(tmp, f"replay_{cores}_{i}.json")
-        wh = os.path.join("/dev/shm" if os.path.isdir("/dev/shm") else tmp, f"spark_graft_wh_{cores}")
-        # cluster-shaped heap: a replay level is a stand-in for N modest
-        # executors, not one 48 GiB JVM — and on this host a lazily-grown
-        # giant heap pays the (sometimes 100x-degraded) fresh-page fault
-        # path for every GiB it expands into mid-measurement
-        env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM=os.environ.get(
-            "SPARK_GRAFT_REPLAY_MEM", "12g"))
-        try:
-            with _CpuSampler() as sampler:
-                subprocess.run(
-                    [
-                        sys.executable, "-m", "arches_rascoll_etl_spark.replay_bench",
-                        "--cores", str(cores),
-                        "--events", events_path,
-                        "--workdir", wh,
-                        "--out", out,
-                    ],
-                    cwd=ROOT,
-                    check=True,
-                    timeout=RUN_TIMEOUT_S,
-                    env=env,
-                    stdout=subprocess.DEVNULL,
-                    stderr=subprocess.DEVNULL,
-                )
-        except (subprocess.TimeoutExpired, subprocess.CalledProcessError) as e:
-            runs_meta.append({
-                "cores": cores, "wall_sec": None,
-                "failed": type(e).__name__, **sampler_stats_safe(),
-            })
-            return None
-        finally:
-            shutil.rmtree(wh, ignore_errors=True)
-        with open(out) as f:
-            r = json.load(f)
-        r["host"] = sampler.stats()
-        runs_meta.append({"cores": cores, "wall_sec": r["wall_sec"], **r["host"]})
-        return r
-
-    def sampler_stats_safe() -> dict:
-        return {"steal_pct_mean": None, "idle_pct_mean": None}
-
-    memtouch_floor = float(os.environ.get("SPARK_GRAFT_MEMTOUCH_FLOOR", "2e8"))
-    for i in range(SCALE_RUNS):
-        if i > 0 and time.time() - phase_t0 > SCALING_BUDGET_S:
-            skipped_pairs = SCALE_RUNS - i
-            break
-        # per-pair health wait: the page-alloc collapse arrives in bursts of
-        # minutes; starting a pair inside one guarantees an invalid pair.
-        # Bounded so a permanently sick host still completes the phase.
-        g0 = _grant_probe()
-        pair_wait_t0 = time.time()
-        while (g0["memtouch"] < memtouch_floor
-               and time.time() - pair_wait_t0 < 240
-               and time.time() - phase_t0 < SCALING_BUDGET_S):
-            time.sleep(45)
-            g0 = _grant_probe()
-        # alternate run order across pairs: the collapse episodes are
-        # roughly periodic and a pair's SECOND run starts minutes into the
-        # healthy stretch, so a fixed order systematically hands the next
-        # episode to the same level (observed: 5 consecutive pairs with a
-        # fast lo and a collapsed hi). ORDER_OFFSET lets a caller that runs
-        # one pair per invocation (tools/hunt_scaling.py) keep alternating.
-        off = int(os.environ.get("SPARK_GRAFT_ORDER_OFFSET", "0"))
-        first, second = (lo, hi) if (i + off) % 2 == 0 else (hi, lo)
-        r_first = one_run(first, 2 * i)
-        g_mid = _grant_probe()
-        r_second = one_run(second, 2 * i + 1) if r_first is not None else None
-        g1 = _grant_probe()
-        r_lo, r_hi = (r_first, r_second) if first == lo else (r_second, r_first)
-        drift = _probe_drift([g0, g_mid, g1])
-        if r_lo is None or r_hi is None:
-            pairs.append({
-                "lo": r_lo, "hi": r_hi, "speedup": None,
-                "grant_drift": round(drift, 2), "valid": False, "failed": True,
-            })
-            if on_pair is not None:
-                on_pair(pairs)
-            continue
-        speedup = r_hi["events_per_sec"] / r_lo["events_per_sec"]
-        # a 4x-core run of a CPU-dense job cannot honestly be SLOWER: a
-        # speedup <= 1 means the host moved under the pair (in a way the
-        # probes may have missed) or the workload is too small to occupy
-        # the hi level — neither is valid scaling evidence (r2 recorded a
-        # 0.25x "valid" pair under the old (1/ratio, ...) band)
-        sane = 1.0 < speedup < ratio * 1.1
-        pair = {
-            "lo": r_lo,
-            "hi": r_hi,
-            "speedup": round(speedup, 3),
-            "grant_drift": round(drift, 2),
-            "valid": bool(drift <= _PAIR_DRIFT_MAX and sane),
-        }
-        # delivered-CPU normalization (replay self-reports /proc/stat busy
-        # deltas around exactly its timed section): speedup ÷ how much more
-        # CPU the hi level actually executed == per-event CPU inflation
-        # lo/hi — the per-window north-rule ratio, no probe timing involved
-        bc_lo, bc_hi = r_lo.get("busy_cores"), r_hi.get("busy_cores")
-        if bc_lo and bc_hi:
-            pair.update({
-                "busy_cores_lo": bc_lo,
-                "busy_cores_hi": bc_hi,
-                "delivered_cpu_ratio": round(bc_hi / bc_lo, 3),
-                "eff_vs_delivered_cpu": round(speedup / (bc_hi / bc_lo), 3),
-            })
-        pairs.append(pair)
-        if on_pair is not None:
-            on_pair(pairs)
-
-    valid = [p for p in pairs if p["valid"]]
-    complete = [p for p in pairs if not p.get("failed")]
-    if not complete:
-        # every pair lost a run to timeout/crash: report the failed
-        # measurement explicitly instead of dying with no output at all
-        return {
-            "measurement_failed": True,
-            "cores_lo": lo,
-            "cores_hi": hi,
-            "runs": runs_meta,
-            "pairs": [
-                {"speedup": p["speedup"], "grant_drift": p["grant_drift"],
-                 "valid": p["valid"], "failed": True}
-                for p in pairs
-            ],
-            "skipped_pairs": skipped_pairs,
-            "valid_pairs": 0,
-            "window_valid": False,
-        }
-    pool = valid if valid else complete  # all-invalid: still report, flagged
-    chosen = sorted(pool, key=lambda p: p["speedup"])[len(pool) // 2]
-    cal = calibrate_host_scaling(lo, hi)
-
-    def _phases(r: dict) -> dict:
-        ph = r.get("batch_phase_ms") or []
-        return {k: round(sum(p[k] for p in ph) / 1000, 2) for k in (ph[0] if ph else {})}
-
-    speedup = chosen["speedup"]
-    out = {
-        "events": chosen["lo"]["events"],
-        "cores_lo": lo,
-        "cores_hi": hi,
-        "lo_events_per_sec": chosen["lo"]["events_per_sec"],
-        "hi_events_per_sec": chosen["hi"]["events_per_sec"],
-        "lo_wall_sec": chosen["lo"]["wall_sec"],
-        "hi_wall_sec": chosen["hi"]["wall_sec"],
-        "lo_phase_sec": _phases(chosen["lo"]),
-        "hi_phase_sec": _phases(chosen["hi"]),
-        "speedup_lo_to_hi": round(speedup, 3),
-        "scaling_efficiency_raw": round(speedup / ratio, 3),
-        "host_cpu_ceiling_speedup": cal["ceiling_speedup"],
-        "host_bandwidth_ceiling_speedup": cal.get("bandwidth_ceiling_speedup"),
-        "host_cpu_ceiling_efficiency": round(cal["ceiling_speedup"] / ratio, 3),
-        "scaling_efficiency_vs_host_ceiling": round(speedup / cal["ceiling_speedup"], 3),
-        # the replay's roofline sits BETWEEN the cpu and bandwidth ceilings
-        # (shuffle + parquet encode are DRAM-traffic-heavy); report the
-        # bandwidth-normalized figure too so a DRAM-starved box is not read
-        # as an engine deficiency
-        "scaling_efficiency_vs_bandwidth_ceiling": round(
-            speedup / cal["bandwidth_ceiling_speedup"], 3)
-        if cal.get("bandwidth_ceiling_speedup") else None,
-        "busy_cores_lo": chosen.get("busy_cores_lo"),
-        "busy_cores_hi": chosen.get("busy_cores_hi"),
-        "delivered_cpu_ratio": chosen.get("delivered_cpu_ratio"),
-        "eff_vs_delivered_cpu": chosen.get("eff_vs_delivered_cpu"),
-        "runs": runs_meta,
-        "pairs": [
-            {"speedup": p["speedup"], "grant_drift": p["grant_drift"], "valid": p["valid"],
-             "failed": bool(p.get("failed")),
-             "lo_wall_sec": p["lo"]["wall_sec"] if p["lo"] else None,
-             "hi_wall_sec": p["hi"]["wall_sec"] if p["hi"] else None,
-             "eff_vs_delivered_cpu": p.get("eff_vs_delivered_cpu")}
-            for p in pairs
-        ],
-        "skipped_pairs": skipped_pairs,
-        "valid_pairs": len(valid),
-        "window_valid": bool(valid),
-    }
-    out.update(gate_info or {})
-    out["best"] = _update_scaling_history(out)
-    return out
-
-
-# a lo/hi pair whose bracketing grant probes moved more than this factor
-# ran across a hypervisor grant change; its speedup compares two different
-# machines and is discarded
-_PAIR_DRIFT_MAX = 1.5
-
-
-def _update_scaling_history(cdc: dict) -> dict:
-    """The sandbox host's granted capacity swings wildly between bench
-    windows (identical code+input has measured 30s..173s at local[16], with
-    steal often invisible to the guest). Persist every window to
-    BENCH/scaling_history.jsonl; the HEADLINE is always THIS window's
-    measurement, with the median across windows as supporting context.
-    Selecting the historical-best window would select for noise-depressed
-    low-parallelism runs (the history already contains a physically
-    impossible 4.26x-on-4x-cores window), so per-window efficiency > 1.0
-    is flagged as noise, never reported as capability."""
-    hist_path = os.path.join(ROOT, "BENCH", "scaling_history.jsonl")
-    os.makedirs(os.path.dirname(hist_path), exist_ok=True)
-    entry = {
-        "events": cdc["events"],
-        "cores_lo": cdc["cores_lo"],
-        "cores_hi": cdc["cores_hi"],
-        "lo_events_per_sec": cdc["lo_events_per_sec"],
-        "hi_events_per_sec": cdc["hi_events_per_sec"],
-        "lo_wall_sec": cdc["lo_wall_sec"],
-        "hi_wall_sec": cdc["hi_wall_sec"],
-        "host_cpu_ceiling_speedup": cdc["host_cpu_ceiling_speedup"],
-        "window_valid": cdc.get("window_valid", True),
-        "grant_probe_abs": cdc.get("grant_probe_abs"),
-        "grant_probe_memtouch_abs": cdc.get("grant_probe_memtouch_abs"),
-    }
-    with open(hist_path, "a") as f:
-        f.write(json.dumps(entry) + "\n")
-    with open(hist_path) as f:
-        hist = [json.loads(line) for line in f if line.strip()]
-    same_pair = [
-        h for h in hist
-        if h["cores_lo"] == cdc["cores_lo"] and h["cores_hi"] == cdc["cores_hi"]
-        # only windows of the same workload size: a scaled-down or smoke
-        # window's absolute throughput would poison the medians
-        and h["events"] == cdc["events"]
-        # pre-validation entries carry no flag and stay in (they were
-        # best-of-level windows); explicitly invalid windows are recorded
-        # but never shape the medians
-        and h.get("window_valid", True)
-    ]
-    ratio = cdc["cores_hi"] / cdc["cores_lo"]
-    # most recent VALID window at this pair/workload — survives in the
-    # report even when THIS window is invalid (the valid windows are hunted
-    # opportunistically between host-collapse bursts; see tools/hunt_scaling.py)
-    # only windows EXPLICITLY flagged valid count here: pre-validation-era
-    # rows (no flag) never passed the drift+sanity test, and one of them is
-    # a physically impossible 4.26x noise window
-    valid_hist = [
-        h for h in hist
-        if h["cores_lo"] == cdc["cores_lo"] and h["cores_hi"] == cdc["cores_hi"]
-        and h["events"] == cdc["events"] and h.get("window_valid") is True
-    ]
-    last_valid = None
-    if valid_hist:
-        h = valid_hist[-1]
-        sp = sorted(v["hi_events_per_sec"] / v["lo_events_per_sec"] for v in valid_hist)
-        last_valid = {
-            "n_valid": len(valid_hist),
-            "median_valid_speedup": _median(sp),
-            "best_valid_speedup": round(sp[-1], 3),
-            "lo_events_per_sec": h["lo_events_per_sec"],
-            "hi_events_per_sec": h["hi_events_per_sec"],
-            "speedup": round(h["hi_events_per_sec"] / h["lo_events_per_sec"], 3),
-            "efficiency_raw": round(
-                h["hi_events_per_sec"] / h["lo_events_per_sec"] / ratio, 3),
-            "host_cpu_ceiling_speedup": h.get("host_cpu_ceiling_speedup"),
-        }
-    if not same_pair:
-        return {"n_runs_in_history": 0, "last_valid_window": last_valid}
-    speedups = sorted(
-        h["hi_events_per_sec"] / h["lo_events_per_sec"] for h in same_pair
+def run_replay(cores: int, events: str, tmp: str) -> dict:
+    out = os.path.join(tmp, f"replay_{cores}.json")
+    proc = subprocess.run(
+        [sys.executable, "-m", "arches_rascoll_etl_spark.replay_bench",
+         "--cores", str(cores), "--events", events,
+         "--workdir", os.path.join(tmp, f"wh_{cores}"), "--out", out],
+        cwd=ROOT, capture_output=True, text=True, timeout=RUN_TIMEOUT_S,
     )
-    median_speedup = speedups[len(speedups) // 2] if len(speedups) % 2 else (
-        (speedups[len(speedups) // 2 - 1] + speedups[len(speedups) // 2]) / 2
-    )
-    noise_windows = sum(1 for s in speedups if s / ratio > 1.0)
-    lo_tp = sorted(h["lo_events_per_sec"] for h in same_pair)
-    median_lo_tp = lo_tp[len(lo_tp) // 2] if len(lo_tp) % 2 else (
-        (lo_tp[len(lo_tp) // 2 - 1] + lo_tp[len(lo_tp) // 2]) / 2
-    )
-    return {
-        "n_runs_in_history": len(same_pair),
-        "last_valid_window": last_valid,
-        "median_window_speedup": round(median_speedup, 3),
-        "median_window_efficiency": round(median_speedup / ratio, 3),
-        "noise_windows_over_unity": noise_windows,
-        "median_window_lo_events_per_sec": round(median_lo_tp, 1),
-        "this_window_grant_vs_median": round(
-            cdc["lo_events_per_sec"] / median_lo_tp, 3
-        ) if median_lo_tp else None,
-    }
+    if proc.returncode:
+        sys.exit(f"replay at local[{cores}] failed:\n{proc.stderr[-2000:]}")
+    with open(out) as f:
+        return json.load(f)
 
 
-def _standalone_md(sa: dict | None) -> list[str]:
-    if not sa:
-        return []
-    lines = [
-        "",
-        "## Standalone-cluster pair (separate executor JVMs, spark-submit --py-files)",
-        "",
-        "local[k] threads share one JVM; this pair runs the SAME replay on a",
-        "real standalone master with 1 worker vs 4 workers"
-        f" ({sa.get('cores_per_worker', '?')} cores each) — one executor JVM per",
-        "worker, so the 4-executor level pays true inter-executor shuffle",
-        "serialization. Same validity rule as the local[k] pairs.",
-        "",
-    ]
-    def _hist_valid_lines() -> list[str]:
-        try:
-            sys.path.insert(0, os.path.join(ROOT, "tools"))
-            from standalone_cluster import valid_from_history
-
-            vw = valid_from_history()
-        except Exception:  # noqa: BLE001
-            return []
-        if not vw:
-            return []
-        sp = sorted(w["speedup_lo_to_hi"] for w in vw)
-        med = _median(sp)
-        best = max(vw, key=lambda w: w["speedup_lo_to_hi"])
-        lines = [
-            "",
-            f"VALID standalone windows so far ({len(vw)};"
-            " BENCH/standalone_history.jsonl):",
-            "",
-            "| c/w | lo ev/s | hi ev/s | speedup | raw eff | drift |",
-            "|---|---|---|---|---|---|",
-        ]
-        lines += [
-            f"| {w.get('cores_per_worker', '?')}"
-            f"{' (pinned)' if w.get('pin_cpus') else ''} |"
-            f" {w['lo_events_per_sec']} | {w['hi_events_per_sec']} |"
-            f" {w['speedup_lo_to_hi']}× | {w['scaling_efficiency_raw']} |"
-            f" {w['grant_drift']}× |"
-            for w in vw
-        ]
-        pinned = [w for w in vw if w.get("pin_cpus")]
-        if pinned:
-            pm = _median(sorted(w["speedup_lo_to_hi"] for w in pinned))
-            bw_effs = sorted(w["eff_vs_bw_ceiling"] for w in pinned
-                             if w.get("eff_vs_bw_ceiling"))
-            bw_note = (
-                f" vs the window's measured DRAM-bandwidth ceiling the"
-                f" median pinned efficiency is {_median(bw_effs)}"
-                if bw_effs else ""
-            )
-            lines += [
-                "",
-                f"Pinned windows ({len(pinned)}): workers taskset to DISJOINT",
-                "core slices, driver on its own slice — the box-partition",
-                "experiment (each executor owns its cores outright, as on a",
-                "fully-packed production host; no borrowing a neighbor's idle",
-                f"cycles). Median speedup {pm}× (raw eff {round(pm / 4, 3)})"
-                f"{bw_note}.",
-                "Reading: pinning LOWERS raw speedup vs the unpinned windows",
-                "because strict confinement removes the idle-core borrowing",
-                "an underloaded box silently grants, and the workload is then",
-                "bandwidth-bound — the bandwidth ceiling cannot be",
-                "partitioned here (no resctrl/MBA in the sandbox; verified",
-                "absent), so the pinned pair bounds what 4 slices of ONE",
-                "memory system deliver. On a real N→4N-node cluster each",
-                "executor brings its own DRAM channels, which is what the",
-                "CPU-roofline cohort below isolates.",
-            ]
-        cpw_now = [w for w in vw
-                   if w.get("cores_per_worker") == STANDALONE_CORES_PER_WORKER]
-        cpw_note = ""
-        if cpw_now and len(cpw_now) != len(vw):
-            cm = _median(sorted(w["speedup_lo_to_hi"] for w in cpw_now))
-            cpw_note = (
-                f" At the current executor size (c/w="
-                f"{STANDALONE_CORES_PER_WORKER}, hi level fits the box):"
-                f" {len(cpw_now)} window(s), median {cm}× (eff"
-                f" {round(cm / 4, 3)})."
-            )
-        lines += [
-            "",
-            f"* median valid speedup **{med}×** (eff {round(med / 4, 3)}); best"
-            f" {best['speedup_lo_to_hi']}× (eff"
-            f" {best['scaling_efficiency_raw']},"
-            f" {best['hi_events_per_sec']} ev/s at 4 executors)."
-            f"{cpw_note} Separate",
-            "  executor JVMs scale well past the single-JVM local[k] figure —",
-            "  each executor owns its own address space (no shared mmap/GC",
-            "  domain), exactly as on a real multi-executor cluster; the",
-            "  spread across valid windows is the host's grant moving, not",
-            "  the engine (drift probes bound it per window).",
-        ]
-        lines += _dense_lines()
-        return lines
-
-    def _dense_lines() -> list[str]:
-        """CPU-roofline windows: same plan/shuffle, map stage made
-        compute-dense (--sha-rounds > 1) so the binding single-box ceiling
-        is CPU, which — unlike DRAM bandwidth — nearly multiplies with
-        cores. Efficiency vs the SAME-WINDOW CPU ceiling is the
-        plan-attributable scaling number."""
-        try:
-            from standalone_cluster import valid_from_history
-
-            dw = valid_from_history(dense=True)
-        except Exception:  # noqa: BLE001
-            return []
-        if not dw:
-            return []
-        best = max(dw, key=lambda w: w.get("eff_vs_cpu_ceiling") or 0.0)
-        effs = sorted(w.get("eff_vs_cpu_ceiling") or 0.0 for w in dw)
-        med_eff = _median(effs)
-        out = [
-            "",
-            "### CPU-roofline windows (--sha-rounds > 1: same plan, same",
-            "shuffled bytes, compute-dense map stage)",
-            "",
-            "Single-box DRAM bandwidth does NOT multiply with cores (measured",
-            "ceiling above), so the standard replay's raw efficiency is",
-            "bandwidth-capped regardless of plan quality. These windows raise",
-            "the map stage's arithmetic intensity (chained sha256 over the",
-            "full content per round — shuffle bytes unchanged) until CPU",
-            "governs, then compare against the same-window CPU ceiling:",
-            "",
-            "| mode | c/w | rounds | events | lo ev/s | hi ev/s | speedup | cpu ceiling | eff vs cpu ceiling | cores lo→hi | eff vs delivered CPU | drift | strict |",
-            "|---|---|---|---|---|---|---|---|---|---|---|---|---|",
-        ]
-        try:
-            from standalone_cluster import is_strict
-        except Exception:  # noqa: BLE001
-            def is_strict(_w):  # type: ignore[misc]
-                return False
-        out += [
-            f"| {w.get('sha_mode', 'repeat')}"
-            f"{' (pinned)' if w.get('pin_cpus') else ''} |"
-            f" {w.get('cores_per_worker', '?')} |"
-            f" {w.get('sha_rounds')} | {w.get('events', '—')} |"
-            f" {w['lo_events_per_sec']} |"
-            f" {w['hi_events_per_sec']} | {w['speedup_lo_to_hi']}× |"
-            f" {w.get('cpu_ceiling', '—')}× |"
-            f" {w.get('eff_vs_cpu_ceiling', '—')} |"
-            f" {w.get('busy_cores_lo', '—')}→{w.get('busy_cores_hi', '—')} |"
-            f" {w.get('eff_vs_delivered_cpu', '—')} | {w['grant_drift']}× |"
-            f" {'YES' if is_strict(w) else 'no'} |"
-            for w in dw
-        ]
-        # headline cohort: fold mode — the only variant whose resource
-        # profile (L1-resident digest chain, nursery-only allocation)
-        # matches the multiprocess-sha256 probe that DEFINES the CPU
-        # ceiling, so its eff-vs-ceiling is a like-for-like ratio. repeat
-        # mode copies a byte per hashed byte (see replay_bench.chained_sha)
-        # and under-states plan scaling whenever the box's bandwidth grant
-        # is poor; its windows stay in the table and the pooled median.
-        # within fold mode, prefer the current default executor size
-        # (STANDALONE_CORES_PER_WORKER — sized so the box can physically
-        # grant the hi level 4x the lo's resources); older oversubscribed
-        # sizes stay in the table and the pooled median.
-        fold_all = [w for w in dw if w.get("sha_mode") == "fold"]
-        fold_cpw = [w for w in fold_all
-                    if w.get("cores_per_worker") == STANDALONE_CORES_PER_WORKER]
-        # a cohort median is only apples-to-apples over IDENTICAL jobs, so
-        # narrow further to the modal (rounds, events) config — selection
-        # by window COUNT, never by score, so the narrowing stays
-        # outcome-blind; minority configs (short-wall experiments whose
-        # serial floor dominates) stay in the table and the pooled median.
-        head_pool = _modal_config(fold_cpw) or fold_all
-        head_effs = sorted(w.get("eff_vs_cpu_ceiling") or 0.0 for w in head_pool)
-        head_med = _median(head_effs) if head_effs else _median(effs)
-        head_label = (
-            f"fold/c-w={STANDALONE_CORES_PER_WORKER}/"
-            f"r{head_pool[0].get('sha_rounds')}/"
-            f"{head_pool[0].get('events')}ev cohort ({len(head_pool)} windows)"
-            if fold_cpw else
-            f"fold-cohort ({len(fold_all)} windows)" if fold_all
-            else f"all-window ({len(dw)})"
-        )
-        north = ("MEETS the ≥0.8 north-rule bar against the ceiling this box"
-                 " can physically grant" if head_med >= 0.8 else
-                 "below the ≥0.8 bar — see PROFILE.md for the residual")
-        n_over = sum(1 for w in dw if (w.get("eff_vs_cpu_ceiling") or 0.0) > 1.0)
-        out += [
-            "",
-            f"* {head_label} median eff-vs-cpu-ceiling **{head_med}** (best"
-            f" any-cohort {best.get('eff_vs_cpu_ceiling')}, speedup"
-            f" {best['speedup_lo_to_hi']}× against a"
-            f" {best.get('cpu_ceiling')}× ceiling;"
-            f" pooled all-cohort median {med_eff}) — {north}.",
-        ]
-        # strict tier: host-telemetry window-quality gates (live-grant
-        # drift ≤1.1, steal ≤5% of each level's configured cores),
-        # pre-registered in tools/standalone_cluster.is_strict and applied
-        # uniformly to every recorded window. The loose tier admits pairs
-        # whose hi level the hypervisor visibly preempted mid-run (steal
-        # spikes, grant moved up to 1.3x between the levels) — those
-        # measure the neighbor VM, not the plan, and they can only DRAG
-        # the median (a preempted lo would push speedup past the 4.4
-        # sanity cap and invalidate).
-        strict_head = [w for w in head_pool if is_strict(w)]
-        if strict_head:
-            s_effs = sorted(
-                w.get("eff_vs_cpu_ceiling") or 0.0 for w in strict_head)
-            s_med = _median(s_effs)
-            s_north = ("MEETS the ≥0.8 north-rule bar" if s_med >= 0.8
-                       else "below the ≥0.8 bar")
-            out += [
-                f"* STRICT-tier cohort (live-grant drift ≤1.1 AND steal ≤5%"
-                f" of configured cores at both levels — the windows where"
-                f" the box verifiably held still): {len(strict_head)}"
-                f" window(s), median eff-vs-cpu-ceiling **{s_med}** —"
-                f" {s_north}. Strict gates are host-telemetry-only and"
-                " outcome-blind; windows failing them are kept in the"
-                " loose-tier table above.",
-            ]
-        pinned_dense = [w for w in head_pool if w.get("pin_cpus")]
-        if pinned_dense:
-            p_raw = sorted(w["scaling_efficiency_raw"] for w in pinned_dense)
-            p_med = _median(p_raw)
-            p_north = (
-                "MEETS the ≥0.8 north-rule bar RAW — no roofline"
-                " normalization needed: with every executor taskset to its"
-                " own disjoint core slice the hi level owns 4x the cores"
-                " outright, and the compute-dense plan delivers ≥0.8 of"
-                " them" if p_med >= 0.8 else
-                f"raw median {p_med} on honestly-partitioned cores"
-            )
-            out += [
-                f"* PINNED cohort (disjoint taskset core slices per"
-                f" executor, driver on its own slice): {len(pinned_dense)}"
-                f" window(s), median RAW efficiency **{p_med}**"
-                f" (speedups: {', '.join(str(w['speedup_lo_to_hi']) for w in pinned_dense)})"
-                f" — {p_north}.",
-            ]
-        # steal stratification: the strict gate's hi-side steal telemetry
-        # used as ANALYSIS instead of a filter — attributes the loose
-        # tier's spread. If efficiency tracks MEASURED hypervisor steal
-        # (cores taken from the hi level mid-run, /proc/stat 'st' deltas
-        # sampled DURING the run, invisible to the bracketing probes), the
-        # low-eff windows measure the neighbor VM, not the plan; if
-        # low-steal windows were also low-eff, the plan itself would be
-        # the binder. Thresholds are the strict gate's own (5% of the hi
-        # level's configured cores) and a 95% busy-core delivery line —
-        # both host-telemetry-only, fixed before the split is computed.
-        sw = [w for w in head_pool
-              if w.get("steal_cores_hi") is not None
-              and w.get("eff_vs_cpu_ceiling") is not None]
-        if len(sw) >= 8:
-            cpw = sw[0].get("cores_per_worker") or STANDALONE_CORES_PER_WORKER
-            hi_cores = 4 * cpw
-            thr = round(0.05 * hi_cores, 2)
-            quiet = sorted(w["eff_vs_cpu_ceiling"] for w in sw
-                           if w["steal_cores_hi"] <= thr)
-            stolen = sorted(w["eff_vs_cpu_ceiling"] for w in sw
-                            if w["steal_cores_hi"] > thr)
-            xs = [w["steal_cores_hi"] for w in sw]
-            ys = [w["eff_vs_cpu_ceiling"] for w in sw]
-            mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-            den = (sum((x - mx) ** 2 for x in xs)
-                   * sum((y - my) ** 2 for y in ys)) ** 0.5
-            r = (sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / den
-                 if den else 0.0)
-            dv = [w for w in sw if w.get("busy_cores_hi") is not None]
-            full = sorted(w["eff_vs_cpu_ceiling"] for w in dv
-                          if w["busy_cores_hi"] >= 0.95 * hi_cores)
-            part = sorted(w["eff_vs_cpu_ceiling"] for w in dv
-                          if w["busy_cores_hi"] < 0.95 * hi_cores)
-            out += [
-                f"* STEAL STRATIFICATION of the loose cohort (analysis, not"
-                f" a gate): windows with mid-run hi-level steal ≤{thr}"
-                f" cores: {len(quiet)} window(s), median eff-vs-ceiling"
-                f" **{_median(quiet) if quiet else '—'}**; steal >{thr}:"
-                f" {len(stolen)} window(s), median"
-                f" **{_median(stolen) if stolen else '—'}**."
-                f" Pearson r(steal_cores_hi, eff) = {round(r, 3)}."
-                + (f" Delivery split: busy-cores-hi ≥ {round(0.95 * hi_cores, 1)}"
-                   f" (box granted the configured cores): {len(full)}"
-                   f" window(s), median **{_median(full) if full else '—'}**;"
-                   f" under-delivered: {len(part)} window(s), median"
-                   f" **{_median(part) if part else '—'}**." if dv else "")
-                + (" Efficiency is a function of measured steal, not of"
-                   " the plan: whenever the hypervisor actually delivers"
-                   " the hi level's cores, the cohort clears the ≥0.8 bar."
-                   if quiet and _median(quiet) >= 0.8
-                   and (not full or _median(full) >= 0.8)
-                   else " Low-steal windows do NOT clear the bar here —"
-                   " the residual is not attributable to steal alone."),
-            ]
-        # eff vs DELIVERED CPU (per-window /proc/stat busy-core accounting —
-        # tools/standalone_cluster.CpuAccount): speedup divided by how much
-        # more CPU the box actually executed for the hi level. Windows with
-        # this field answer the north rule directly and per-window; the
-        # absolute cores show whether the configured 4→16 was ever granted.
-        dcw = [w for w in dw if w.get("eff_vs_delivered_cpu")]
-        if dcw:
-            des = sorted(w["eff_vs_delivered_cpu"] for w in dcw)
-            med_de = _median(des)
-            north_de = ("MEETS the ≥0.8 bar" if med_de >= 0.8
-                        else "below the ≥0.8 bar")
-            out += [
-                f"* eff-vs-DELIVERED-CPU across {len(dcw)} instrumented"
-                f" window(s): median **{med_de}** (best {des[-1]}) — speedup"
-                " ÷ (busy-cores hi / busy-cores lo), measured from /proc/stat"
-                " deltas DURING each run, so a window where the hypervisor"
-                " under-delivered cores is normalized by what it actually"
-                f" gave, not by a probe's guess — {north_de}. Absolute"
-                " busy-core columns above show delivery; per-event CPU"
-                " inflation hi/lo is visible as delivered-ratio ÷ speedup.",
-            ]
-        # per-cohort medians: (rounds, events) sets the map stage's
-        # arithmetic intensity, so cohorts are different experiments —
-        # lower-intensity windows still carry a DRAM component and dilute
-        # the pooled figure when the box's bandwidth grant is poor.
-        cohorts: dict[tuple, list[float]] = {}
-        for w in dw:
-            key = (w.get("sha_mode", "repeat"), w.get("cores_per_worker"),
-                   w.get("sha_rounds"), w.get("events"))
-            cohorts.setdefault(key, []).append(w.get("eff_vs_cpu_ceiling") or 0.0)
-        if len(cohorts) > 1:
-            for (mode, cpw, rounds, events), ce in sorted(
-                    cohorts.items(), key=lambda kv: tuple(map(str, kv[0]))):
-                ces = sorted(ce)
-                out += [
-                    f"* cohort mode={mode}, c/w={cpw}, rounds={rounds}, events={events}:"
-                    f" {len(ces)} valid window(s), median eff-vs-cpu-ceiling"
-                    f" **{_median(ces)}** — fold mode / higher rounds ="
-                    " higher compute per byte = less residual DRAM"
-                    " sensitivity (repeat mode still copies a byte per"
-                    " hashed byte; see replay_bench.chained_sha).",
-                ]
-        out += ([
-            f"* {n_over} window(s) measured eff-vs-ceiling > 1.0 — impossible"
-            " against a correctly-measured ceiling, so those windows' short"
-            " ceiling probes under-measured a mid-window grant rise; they are"
-            " noise in the ceiling, never capability, and only the MEDIAN is"
-            " the headline.",
-        ] if n_over else []) + [
-            "* Reading: when the box can hand the 4-executor level k× the",
-            "  CPU, the plan delivers ≥0.8·k× more events/sec — the residual",
-            "  in the STANDARD replay's raw number is the shared-DRAM box,",
-            "  not a serial stage or an extra shuffle in the plan.",
-        ]
-        return out
-
-    if sa.get("failed"):
-        lines += [f"**FAILED**: {sa['failed']} — no standalone number this window.", ""]
-        lines += _hist_valid_lines()
-        return lines
-    lines += [
-        "| level | executors | events | wall sec | events/sec |",
-        "|---|---|---|---|---|",
-        f"| lo | 1×{sa['cores_per_worker']}c | {sa['events']} | {sa['lo_wall_sec']} | {sa['lo_events_per_sec']} |",
-        f"| hi | 4×{sa['cores_per_worker']}c | {sa['events']} | {sa['hi_wall_sec']} | {sa['hi_events_per_sec']} |",
-        "",
-        f"* speedup 1→4 executors: **{sa['speedup_lo_to_hi']}×**, raw efficiency"
-        f" **{sa['scaling_efficiency_raw']}**; grant drift {sa['grant_drift']}×,"
-        f" {'VALID' if sa.get('valid') else 'INVALID (grant moved or insane speedup)'}.",
-        "* Both levels still share this one box's DRAM/cache grant — on a real",
-        "  N→4N-node cluster memory bandwidth multiplies with nodes, so this",
-        "  single-box figure lower-bounds true cluster scaling (see ceilings above).",
-    ]
-    lines += _hist_valid_lines()
-    return lines
+def _sf_label(path: str) -> float | str:
+    base = os.path.basename(path.rstrip("/"))
+    return float(base[2:]) if base.startswith("sf") else base
 
 
-def write_bench_md(times: dict[str, float], cdc: dict, buckets: dict | None = None,
-                   standalone: dict | None = None,
-                   headline_gate: dict | None = None,
-                   skew: dict | None = None) -> None:
-    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
-    # snapshot the inputs so `python bench.py --report-only` can regenerate
-    # this report (folding in hunt windows appended to the history files
-    # since) without re-running any measured phase
-    try:
-        with open(os.path.join(ROOT, "BENCH", "last_inputs.json"), "w") as f:
-            json.dump({"times": times, "cdc": cdc, "buckets": buckets,
-                       "standalone": standalone,
-                       "headline_gate": headline_gate, "skew": skew}, f)
-    except TypeError:
-        pass  # non-serializable phase detail must never block the report
-    if cdc.get("measurement_failed"):
-        _write_bench_md_failed(times, cdc, buckets)
-        return
-    lines = [
-        "# BENCH baseline — arches_rascoll_etl_spark",
-        "",
-        "The reference publishes no benchmark numbers (README.md:14 disclaims",
-        "polish; ref_collection.py:92-94 disclaims optimization); its data scale",
-        "is ~44k pandas rows total. Numbers below are this engine's measured",
-        "baseline in the sandbox.",
-        "",
-        f"## Headline queries (sf_dir={SF_DIR}, local[{CPUS}], noop sink)",
-        "",
-    ]
-    if headline_gate:
-        rel = headline_gate.get("headline_grant_probe_vs_median")
-        waited = headline_gate.get("headline_grant_waited_s", 0)
-        lines += [
-            f"Host-grant flag for this headline window: probe at"
-            f" **{rel if rel is not None else 'n/a (no history)'}×** the"
-            f" historical median (gate target ≥0.9; waited {waited:g}s for"
-            " health). Compare per-query times across rounds only through"
-            " this flag — identical code has measured 4× apart on this host"
-            " purely from grant swings.",
-            "",
-        ]
-    lines += [
-        "| query | sec |",
-        "|---|---|",
-    ]
-    lines += [f"| {k} | {v} |" for k, v in times.items()]
-    lines += [
-        "",
-        "## North-rule scaling: CDC replay (binlog → lake upsert)",
-        "",
-        f"Same job, same input files, two parallelism levels (local[{cdc['cores_lo']}]",
-        f"vs local[{cdc['cores_hi']}] as the sandbox stand-in for N vs 4N executors).",
-        f"{SCALE_RUNS} back-to-back lo→hi pairs, each BRACKETED by short host-grant",
-        "probes (multiprocess sha256 throughput): a pair whose probes drifted",
-        f"> {_PAIR_DRIFT_MAX}× ran across a hypervisor grant change and compares two",
-        "different machines, so it is discarded, as is any physically insane",
-        "speedup (outside (1/ratio, ratio·1.1)). **The headline is the MEDIAN",
-        "VALID pair — never the best.** An all-invalid window is reported as a",
-        "failed measurement, not as capability or its absence:",
-        "",]
-    lines += [
-        "| pair | lo wall s | hi wall s | speedup | grant drift | valid |",
-        "|---|---|---|---|---|---|",
-    ] + [
-        f"| {i} | {p['lo_wall_sec']} | {p['hi_wall_sec']} | {p['speedup']} | {p['grant_drift']}× | {'yes' if p['valid'] else 'NO'} |"
-        for i, p in enumerate(cdc.get("pairs", []))
-    ] + [
-        "",
-        f"Valid pairs: {cdc.get('valid_pairs', '?')}/{len(cdc.get('pairs', []))}."
-        + (f" ({cdc['skipped_pairs']} pair(s) not started: scaling-phase"
-           f" wall budget {SCALING_BUDGET_S:g}s exhausted.)"
-           if cdc.get("skipped_pairs") else "")
-        + (f" (CDC events scaled down to {cdc['events']}:"
-           f" {cdc.get('events_scaled_down_reason', 'degraded host grant')}.)"
-           if cdc.get("events_scaled_down") else "")
-        + ("" if cdc.get("window_valid", True) else
-           " **ALL PAIRS INVALID — the host grant never held still for one"
-           " lo+hi pair; the numbers below are the median raw pair and say"
-           " nothing about the engine. See history context.**"),
-        "",
-        "Median-valid-pair runs:",
-        "",]
-    lines += [
-        "| config | events | wall sec | events/sec |",
-        "|---|---|---|---|",
-        f"| local[{cdc['cores_lo']}] | {cdc['events']} | {cdc['lo_wall_sec']} | {cdc['lo_events_per_sec']} |",
-        f"| local[{cdc['cores_hi']}] | {cdc['events']} | {cdc['hi_wall_sec']} | {cdc['hi_events_per_sec']} |",
-        "",
-        f"* replay speedup {cdc['cores_lo']}→{cdc['cores_hi']} cores: **{cdc['speedup_lo_to_hi']}×**"
-        f" → raw efficiency (speedup/{cdc['cores_hi'] // cdc['cores_lo']}): **{cdc['scaling_efficiency_raw']}**",
-        f"* host CPU ceiling (multiprocess sha256 burn, {cdc['cores_lo']}→{cdc['cores_hi']} procs):"
-        f" **{cdc['host_cpu_ceiling_speedup']}×**;"
-        f" host MEMORY-BANDWIDTH ceiling (64MB memcpy burn):"
-        f" **{cdc.get('host_bandwidth_ceiling_speedup', 'n/a')}×** — single-box DRAM",
-        "  saturates long before the core count, and a shuffle/scan/write job is",
-        "  a CPU+bandwidth mix, so its achievable single-box speedup sits BETWEEN",
-        "  the two ceilings. On a real N→4N-node cluster both CPU and bandwidth",
-        "  multiply with the nodes — the single-box figure LOWER-BOUNDS true",
-        "  cluster scaling.",
-        f"* replay efficiency normalized to the host CPU ceiling:"
-        f" **{cdc['scaling_efficiency_vs_host_ceiling']}**;"
-        f" normalized to the BANDWIDTH ceiling:"
-        f" **{cdc.get('scaling_efficiency_vs_bandwidth_ceiling', 'n/a')}** —"
-        " the replay's roofline sits between the two"
-        " (north-rule target ≥ 0.8 applies to real N vs 4N executor clusters).",
-    ] + ([
-        f"* CPU actually DELIVERED (replay-self-measured /proc/stat busy"
-        f" deltas around its timed section): {cdc['busy_cores_lo']} →"
-        f" {cdc['busy_cores_hi']} cores ({cdc['delivered_cpu_ratio']}×);"
-        f" speedup ÷ delivered = **{cdc['eff_vs_delivered_cpu']}** — the"
-        " per-event CPU-cost ratio lo/hi. Caveat: busy jiffies count"
-        " SCHEDULED time, not cycles, so hypervisor cycle-rate throttling"
-        " inflates per-event jiffies; read alongside the live-grant drift.",
-    ] if cdc.get("eff_vs_delivered_cpu") else []) + [
-        "",
-        "Per-phase wall seconds of the best run at each level (stats = key-only",
-        "bucket job; apply = fused scan→LWW→bucketed write; commit = manifest CAS;",
-        "the remainder is driver plan-construction/checkpoint time):",
-        "",
-        "| level | stats s | apply s | commit s | wall s |",
-        "|---|---|---|---|---|",
-        f"| local[{cdc['cores_lo']}] | {cdc['lo_phase_sec'].get('stats')} | {cdc['lo_phase_sec'].get('apply')}"
-        f" | {cdc['lo_phase_sec'].get('commit')} | {cdc['lo_wall_sec']} |",
-        f"| local[{cdc['cores_hi']}] | {cdc['hi_phase_sec'].get('stats')} | {cdc['hi_phase_sec'].get('apply')}"
-        f" | {cdc['hi_phase_sec'].get('commit')} | {cdc['hi_wall_sec']} |",
-        "",
-        "See BENCH/PROFILE.md for the stage-level evidence (executor CPU vs run",
-        "time) that the apply stages are CPU-dense, not barrier-bound.",
-        "",
-        "Per-run host conditions (mean steal% / mean idle% while the run was live):",
-        "",
-        "| run | cores | wall sec | steal% | idle% |",
-        "|---|---|---|---|---|",
-    ]
-    lines += [
-        f"| {i} | {r['cores']} | {r['wall_sec']} | {r.get('steal_pct_mean', 0)} | {r.get('idle_pct_mean', 0)} |"
-        for i, r in enumerate(cdc.get("runs", []))
-    ]
-    hist = cdc.get("best")
-    lv = (hist or {}).get("last_valid_window")
-    if lv:
-        lines += [
-            "",
-            "### VALID local[k] windows (same pair, same workload)",
-            "",
-            "Valid = grant drift ≤ 1.5× on both probe axes AND 1 < speedup <",
-            "4.4. Windows are hunted opportunistically between the host's",
-            "page-allocation-collapse bursts (tools/hunt_scaling.py):",
-            "",
-            f"* {lv['n_valid']} valid window(s): median speedup"
-            f" **{lv['median_valid_speedup']}×** (eff"
-            f" {round(lv['median_valid_speedup'] / 4, 3)}), best"
-            f" {lv['best_valid_speedup']}×. Most recent: lo"
-            f" {lv['lo_events_per_sec']} ev/s → hi {lv['hi_events_per_sec']}"
-            f" ev/s, speedup **{lv['speedup']}×**"
-            + (f", host CPU ceiling that window {lv['host_cpu_ceiling_speedup']}×."
-               if lv.get("host_cpu_ceiling_speedup") else "."),
-            "* local[k] levels share ONE JVM/address space; the standalone",
-            "  multi-JVM pairs below are the cluster-faithful measurement.",
-        ]
-    if hist and hist.get("median_window_speedup") is not None:
-        lines += [
-            "",
-            "### History context"
-            f" ({hist['n_runs_in_history']} windows in BENCH/scaling_history.jsonl)",
-            "",
-            "**The headline scaling number is THIS window's measurement (above).**",
-            "The host's granted capacity swings between windows — identical",
-            "code+input has measured 30s..173s at the high level, with steal often",
-            "invisible to the guest — so history is context, not capability:",
-            "",
-            f"* Median across windows: speedup **{hist['median_window_speedup']}×**,"
-            f" efficiency **{hist['median_window_efficiency']}**.",
-            f"* {hist['noise_windows_over_unity']} window(s) measured efficiency > 1.0 —"
-            " physically impossible on 4× cores, flagged as noise (their lo runs",
-            "  were themselves noise-depressed), never reported as capability.",
-        ]
-        grant = hist.get("this_window_grant_vs_median")
-        if grant is not None and (grant < 0.67 or grant > 1.5):
-            hi_lo = "BELOW" if grant < 1 else "ABOVE"
-            hist_tp = hist.get("median_window_lo_events_per_sec")
-            lines += [
-                f"* **Host-grant flag**: this window's absolute low-level throughput"
-                f" ({cdc['lo_events_per_sec']} ev/s) is {grant}× the historical"
-                f" median ({hist_tp} ev/s) — the host's granted capacity was"
-                f" far {hi_lo} normal while this window ran (identical code+input;"
-                " corroborated by the CPU/bandwidth ceilings and steal% above)."
-                " Compare ABSOLUTE events/sec across rounds only through this lens;"
-                " the 4-vs-16 RATIO above was still measured under equal,"
-                " interleaved conditions.",
-            ]
-    if buckets:
-        lines += [
-            "",
-            f"## Bucket-count realism (n_buckets={buckets['n_buckets']}, 1M-event base)",
-            "",
-            "COW merge cost must track TOUCHED buckets, not table size:",
-            "",
-            "| batch | rows in | touched buckets | merge wall ms |",
-            "|---|---|---|---|",
-            f"| wide (every bucket) | {buckets['wide_rows_in']} | {buckets['wide_touched_buckets']} | {buckets['wide_wall_ms']} |",
-            f"| narrow (~dozen keys) | {buckets['narrow_rows_in']} | {buckets['narrow_touched_buckets']} | {buckets['narrow_wall_ms']} |",
-            "",
-            f"narrow/wide wall ratio: **{buckets['narrow_over_wide_wall']}** —"
-            " the narrow merge pays fixed job overhead plus a rewrite of only",
-            "its touched buckets' files (manifest-level pruning), which is what",
-            "bounds merge cost at 100 TB / 4096 buckets.",
-        ]
-        if "scatter_mor_over_cow_bytes" in buckets:
-            lines += [
-                "",
-                "### Scattered updates: COW vs MOR write amplification",
-                "",
-                f"Same-size scattered batch ({buckets['scatter_rows_in']} rows"
-                f" across {buckets['scatter_touched_buckets']} buckets — few"
-                " rows, many buckets, COW's worst case):",
-                "",
-                "| mode | merge wall ms | bytes written |",
-                "|---|---|---|",
-                f"| COW (rewrites every touched bucket) | {buckets['scatter_cow_wall_ms']} | {buckets['scatter_cow_bytes']} |",
-                f"| MOR (appends per-bucket deltas) | {buckets['scatter_mor_wall_ms']} | {buckets['scatter_mor_bytes']} |",
-                "",
-                f"* MOR writes **{buckets['scatter_mor_over_cow_bytes']}×** the"
-                " bytes COW writes for the same scattered batch — write cost"
-                " tracks the BATCH, not the touched buckets. At 100 TB this is",
-                "  the difference between kilobytes and gigabytes per batch;",
-                "  readers pay the LWW fold on delta-bearing buckets until",
-                "  compact() folds deltas back (lake/parquet_snapshot.py",
-                "  merge(mode='mor'), value-checked by q60 + tests/test_lake_mor.py).",
-            ]
-    if skew and not skew.get("failed"):
-        n_ev = skew.get("events") or 0
-        ppr = skew.get("paths_per_repo") or 1
-        nrep = skew.get("n_repos") or 1
-        hot_per_key = round(n_ev * skew.get("hot_fraction_skewed", 0.5) / ppr)
-        uni_per_key = round(n_ev / (nrep * ppr))
-        lines += [
-            "",
-            f"## Adversarial hot-key skew replay ({n_ev} events, "
-            f"local[{skew.get('cores_lo')}] / local[{skew.get('cores_hi')}])",
-            "",
-            "Two logs identical except skew: uniform (hot_fraction=0) vs ONE",
-            f"repo carrying 50% of all events over {ppr}"
-            f" paths (~{hot_per_key} events per hot key vs ~{uni_per_key}"
-            " uniform). Full CDC merge",
-            "replay; the map-side LWW partial aggregation plus the bucket-hash",
-            "exchange are the skew defenses under test (north_star: hot repos",
-            "salted/repartitioned; operators/lww.py lww_latest_salted is the",
-            "explicit escalation for keys hotter than this).",
-            "",
-            "| log | cores | wall s | events/s | straggler (max/median task) |",
-            "|---|---|---|---|---|",
-        ]
-        for tag in ("uniform", "skewed"):
-            for level, ck in (("lo", "cores_lo"), ("hi", "cores_hi")):
-                r = skew.get(f"{tag}_{level}") or {}
-                if r.get("failed"):
-                    lines.append(f"| {tag} | {skew.get(ck)} | FAILED ({r['failed']}) | — | — |")
-                else:
-                    lines.append(
-                        f"| {tag} | {skew.get(ck)} | {r.get('wall_sec')} | "
-                        f"{r.get('events_per_sec')} | "
-                        f"{r.get('task_straggler_max_over_median')} |")
-        lines += [
-            "",
-            f"skewed/uniform wall ratio: lo **{skew.get('skew_over_uniform_lo')}**, "
-            f"hi **{skew.get('skew_over_uniform_hi')}** — ≈1.0 means the 50%-hot",
-            "log costs the same as the uniform one (hot keys collapse map-side",
-            "before the exchange, so no reducer sees the skew). The straggler",
-            "column is the heaviest stage's max/median task duration from the",
-            "status API's taskSummary (also asserted bounded in",
-            "tests/test_skew_straggler.py).",
-        ]
-    elif skew and skew.get("failed"):
-        lines += ["", "## Adversarial hot-key skew replay", "",
-                  f"phase failed: {skew['failed']}"]
-    lines += _standalone_md(standalone)
-    lines += [""]
-    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines))
+def host_stamp() -> dict:
+    from arches_rascoll_etl_spark.session import mem_total_kib
 
-
-def _write_bench_md_failed(times: dict[str, float], cdc: dict, buckets: dict | None) -> None:
-    """Minimal BASELINE.md for a window in which every scaling pair lost a
-    run to timeout/crash: headline + bucket numbers still land; the scaling
-    section reports a failed measurement rather than pretending."""
-    lines = [
-        "# BENCH baseline — arches_rascoll_etl_spark",
-        "",
-        f"## Headline queries (sf_dir={SF_DIR}, local[{CPUS}], noop sink)",
-        "",
-        "| query | sec |",
-        "|---|---|",
-    ]
-    lines += [f"| {k} | {v} |" for k, v in times.items()]
-    lines += [
-        "",
-        "## North-rule scaling: CDC replay — **MEASUREMENT FAILED**",
-        "",
-        f"Every lo/hi pair at local[{cdc['cores_lo']}]→local[{cdc['cores_hi']}]"
-        f" lost a run to the per-run {RUN_TIMEOUT_S:g}s timeout or a crash"
-        " (see runs below); the window produced NO scaling number. This says"
-        " the HOST was unusable during the window, not that the engine fails"
-        " to scale — see BENCH/scaling_history.jsonl for windows that did"
-        " measure.",
-        "",
-        "| run | cores | wall sec | failed |",
-        "|---|---|---|---|",
-    ]
-    lines += [
-        f"| {i} | {r['cores']} | {r['wall_sec']} | {r.get('failed', '')} |"
-        for i, r in enumerate(cdc.get("runs", []))
-    ]
-    lines += [""]
-    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines))
-
-
-def _compact_final(result: dict) -> dict:
-    """The very LAST stdout line: everything the driver grades, < ~2 KB.
-
-    Two consecutive rounds shipped ``parsed: null`` because the final
-    cumulative emit (per-run walls + per-pair brackets + history + the
-    standalone block) overflowed the driver's bounded stdout-tail capture,
-    so its tail began MID-line and no JSON parsed. The fix is ordering +
-    size: the full cumulative line still prints (humans, logs, resumption),
-    and then one compact line prints AFTER it with every array-valued field
-    stripped — headline value + per-query secs + the scalar scaling verdict
-    of each phase. A tail buffer of any plausible size ends with a complete
-    parseable JSON object."""
-    out = {
-        "metric": result["metric"],
-        "value": result["value"],
-        "unit": result["unit"],
-        "queries": result["queries"],
-        "sf": result["sf"],
-        "partial": result.get("partial", False),
-    }
-    for k in ("grant_probe_vs_median", "events_scaled_down"):
-        if k in result:
-            out[k] = result[k]
-    if "headline_grant_probe_vs_median" in result:
-        out["headline_grant_probe_vs_median"] = result["headline_grant_probe_vs_median"]
-    cdc = result.get("cdc_scaling") or {}
-    if cdc:
-        keep = ("events", "cores_lo", "cores_hi", "lo_events_per_sec",
-                "hi_events_per_sec", "speedup_lo_to_hi", "scaling_efficiency_raw",
-                "scaling_efficiency_vs_host_ceiling",
-                "scaling_efficiency_vs_bandwidth_ceiling",
-                "busy_cores_lo", "busy_cores_hi", "delivered_cpu_ratio",
-                "eff_vs_delivered_cpu", "valid_pairs",
-                "window_valid")
-        out["cdc_scaling"] = {k: cdc[k] for k in keep if k in cdc}
-    sa = result.get("standalone_scaling") or {}
-    if sa:
-        keep = ("cores_per_worker", "executors_lo", "executors_hi", "events",
-                "lo_events_per_sec", "hi_events_per_sec", "speedup_lo_to_hi",
-                "scaling_efficiency_raw", "grant_drift", "valid", "failed")
-        sa_c = {k: sa[k] for k in keep if k in sa}
-        try:
-            sys.path.insert(0, os.path.join(ROOT, "tools"))
-            from standalone_cluster import is_strict, valid_from_history
-
-            vw = valid_from_history()
-            if vw:
-                sp = sorted(w["speedup_lo_to_hi"] for w in vw)
-                sa_c["history_n_valid"] = len(vw)
-                sa_c["history_median_speedup"] = _median(sp)
-                sa_c["history_best_speedup"] = round(sp[-1], 3)
-                sa_c["history_median_efficiency"] = round(_median(sp) / 4, 3)
-            dw = valid_from_history(dense=True)
-            if dw:
-                effs = sorted(w.get("eff_vs_cpu_ceiling") or 0.0 for w in dw)
-                sa_c["cpu_roofline_n_valid"] = len(dw)
-                sa_c["cpu_roofline_median_eff_vs_ceiling"] = _median(effs)
-                sa_c["cpu_roofline_best_eff_vs_ceiling"] = effs[-1]
-                # headline cohort (mirrors BASELINE.md's _dense_lines):
-                # fold mode matches the ceiling probe's resource profile,
-                # the current executor size is the one the box can
-                # physically grant 4x, and _modal_config narrows to the
-                # most-populous (rounds, events) job so the median compares
-                # identical work — older/minority cohorts stay in the
-                # pooled median above.
-                head_pool = _modal_config([
-                    w for w in dw
-                    if w.get("sha_mode") == "fold"
-                    and w.get("cores_per_worker") == STANDALONE_CORES_PER_WORKER
-                ])
-                if head_pool:
-                    head = sorted(w.get("eff_vs_cpu_ceiling") or 0.0
-                                  for w in head_pool)
-                    sa_c["cpu_roofline_headline_cohort"] = (
-                        f"fold/c-w={STANDALONE_CORES_PER_WORKER}/"
-                        f"r{head_pool[0].get('sha_rounds')}/"
-                        f"{head_pool[0].get('events')}ev")
-                    sa_c["cpu_roofline_headline_n"] = len(head)
-                    sa_c["cpu_roofline_headline_median_eff"] = _median(head)
-                    # strict tier: live-grant drift ≤1.1 + steal ≤5% of
-                    # each level's cores (standalone_cluster.is_strict) —
-                    # windows where host telemetry shows the box held still
-                    s_head = sorted(
-                        w.get("eff_vs_cpu_ceiling") or 0.0
-                        for w in head_pool if is_strict(w))
-                    if s_head:
-                        sa_c["cpu_roofline_strict_n"] = len(s_head)
-                        sa_c["cpu_roofline_strict_median_eff"] = _median(s_head)
-                    d_head = sorted(
-                        w["eff_vs_delivered_cpu"] for w in head_pool
-                        if w.get("eff_vs_delivered_cpu"))
-                    if d_head:
-                        sa_c["headline_n_delivered_cpu"] = len(d_head)
-                        sa_c["headline_median_eff_vs_delivered_cpu"] = (
-                            _median(d_head))
-                des = sorted(w["eff_vs_delivered_cpu"] for w in dw
-                             if w.get("eff_vs_delivered_cpu"))
-                if des:
-                    sa_c["n_delivered_cpu_windows"] = len(des)
-                    sa_c["median_eff_vs_delivered_cpu"] = _median(des)
-                    sa_c["best_eff_vs_delivered_cpu"] = des[-1]
-        except Exception:  # noqa: BLE001 — compact line must never die
-            pass
-        out["standalone_scaling"] = sa_c
-    bs = result.get("bucket_scaling") or {}
-    if bs:
-        out["bucket_scaling"] = {
-            k: bs[k]
-            for k in ("n_buckets", "narrow_over_wide_wall",
-                      "scatter_mor_over_cow_bytes")
-            if k in bs
-        }
-    pd_ = result.get("standalone_pinned_dense") or {}
-    if pd_:
-        out["standalone_pinned_dense"] = {
-            k: pd_[k] for k in (
-                "speedup_lo_to_hi", "scaling_efficiency_raw",
-                "eff_vs_delivered_cpu", "grant_drift", "valid",
-                "strict_valid", "failed")
-            if k in pd_
-        }
-    sk = result.get("skew_replay") or {}
-    if sk and not sk.get("failed"):
-        sk_c = {k: sk[k] for k in
-                ("events", "skew_over_uniform_lo", "skew_over_uniform_hi")
-                if k in sk}
-        worst = [
-            (sk.get(f"skewed_{lvl}") or {}).get("task_straggler_max_over_median")
-            for lvl in ("lo", "hi")
-        ]
-        worst = [w for w in worst if isinstance(w, (int, float))]
-        if worst:
-            sk_c["skewed_task_straggler_max_over_median"] = max(worst)
-        out["skew_replay"] = sk_c
-    elif sk.get("failed"):
-        out["skew_replay"] = {"failed": sk["failed"][:80]}
-    # hard size bound: r3's driver tail captured ~2.2 KB, and the full
-    # compact line measured 2.03 KB once the roofline-history stats landed —
-    # too thin a margin. Shed the least-load-bearing scalars (best-of
-    # figures, redundant counts) in a fixed order until the line fits with
-    # headroom; medians, validity, and per-query times always survive.
-    _SHED = [
-        ("skew_replay", "events"),
-        ("standalone_pinned_dense", "grant_drift"),
-        ("standalone_pinned_dense", "eff_vs_delivered_cpu"),
-        ("standalone_scaling", "best_eff_vs_delivered_cpu"),
-        ("standalone_scaling", "n_delivered_cpu_windows"),
-        ("standalone_scaling", "headline_n_delivered_cpu"),
-        ("standalone_scaling", "cpu_roofline_best_eff_vs_ceiling"),
-        ("standalone_scaling", "history_best_speedup"),
-        ("standalone_scaling", "cpu_roofline_headline_cohort"),
-        ("cdc_scaling", "scaling_efficiency_vs_bandwidth_ceiling"),
-        ("cdc_scaling", "busy_cores_lo"),
-        ("cdc_scaling", "busy_cores_hi"),
-        ("standalone_scaling", "lo_wall_sec"),
-        ("standalone_scaling", "hi_wall_sec"),
-    ]
-    for section, key in _SHED:
-        if len(json.dumps(out)) <= 1600:
-            break
-        out.get(section, {}).pop(key, None)
-    return out
+    sha = subprocess.run(["git", "rev-parse", "--short", "HEAD"], cwd=ROOT,
+                         capture_output=True, text=True).stdout.strip()
+    return {"nproc": NPROC, "mem_total_kib": mem_total_kib(), "git_sha": sha or None}
 
 
 def main() -> None:
-    """Each phase prints a full, parseable JSON line as soon as its numbers
-    exist (``"partial": true`` until the last), so an external timeout that
-    kills the process mid-scaling still leaves every completed phase's
-    numbers on stdout — the r2 driver run was killed mid-scaling and the
-    already-finished headline was lost because bench printed only at the
-    very end."""
-    result: dict = {
-        "metric": "headline_total_plus_cdc_scaling",
-        "value": None,
+    from arches_rascoll_etl_spark.session import get_spark
+
+    lo, hi = max(1, CPUS // 4), CPUS
+    with tempfile.TemporaryDirectory(prefix="bench_") as tmp:
+        events = os.path.join(tmp, "events")
+        spark = get_spark(app_name="bench", cores=CPUS, shuffle_partitions=max(CPUS, 16))
+        spark.sparkContext.setLogLevel("ERROR")
+        times = run_headline(spark)
+        gen_change_log(spark, events)
+        spark.stop()
+        r_lo, r_hi = run_replay(lo, events, tmp), run_replay(hi, events, tmp)
+    speedup = r_hi["events_per_sec"] / r_lo["events_per_sec"]
+    print(json.dumps({
+        "metric": "headline_total",
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
-        "queries": {},
+        "queries": times,
         "sf": _sf_label(SF_DIR),
-        "partial": True,
-    }
-
-    def emit() -> None:
-        # full cumulative line (humans, logs), then a compact line so the
-        # stdout TAIL always ends in a complete parseable JSON object even
-        # if the process is killed right after this phase (see
-        # _compact_final for the two-rounds-of-parsed-null postmortem)
-        print(json.dumps(result), flush=True)
-        print(json.dumps(_compact_final(result)), flush=True)
-
-    headline_gate = gate_headline()
-    result.update(headline_gate)
-    times = run_headline()
-    result["queries"] = times
-    result["value"] = round(sum(times.values()), 3)
-    emit()
-
-    buckets = run_bucket_scaling()
-    result["bucket_scaling"] = buckets
-    emit()
-
-    cdc_events, gate = _gate_cdc_events()
-    result["cdc_events"] = cdc_events
-    result.update({k: v for k, v in gate.items() if k.startswith(("grant_", "events_"))})
-    emit()
-
-    def on_pair(pairs: list[dict]) -> None:
-        result["cdc_scaling_partial"] = {
-            "pairs_done": len(pairs),
-            "pairs": [
-                {"speedup": p["speedup"], "grant_drift": p["grant_drift"],
-                 "valid": p["valid"], "failed": bool(p.get("failed"))}
-                for p in pairs
-            ],
-        }
-        emit()
-
-    standalone = None
-    tmp = tempfile.mkdtemp(prefix="cdc_bench_")
-    try:
-        events_path = os.path.join(tmp, "events")
-        gen_cdc_input(events_path, cdc_events)
-        cdc = run_cdc_scaling(events_path, tmp, on_pair=on_pair, gate_info=gate)
-        result.pop("cdc_scaling_partial", None)
-        result["cdc_scaling"] = cdc
-        emit()
-        if STANDALONE:
-            # real-cluster-shaped evidence: 1 vs 4 executor JVMs under a
-            # standalone master, same input files (north rule: N vs 4N
-            # executors via spark-submit --py-files). Own try so a cluster
-            # failure can't erase the local[k] numbers above.
-            try:
-                sys.path.insert(0, os.path.join(ROOT, "tools"))
-                from standalone_cluster import append_history, run_standalone_scaling
-
-                standalone = run_standalone_scaling(
-                    events_path, tmp,
-                    cores_per_worker=STANDALONE_CORES_PER_WORKER,
-                    run_timeout_s=RUN_TIMEOUT_S,
-                    # mid-pair host-health gate (health probes only, see
-                    # run_standalone_scaling): without it the one window a
-                    # reporting run records is hostage to theft arriving at
-                    # hi launch — r3/r4 driver windows landed invalid that way
-                    midpair_gate_s=180.0,
-                )
-                append_history(standalone)
-                # optional CPU-roofline pair (compute-dense map stage, same
-                # shuffled bytes — see replay_bench --sha-rounds). Off by
-                # default: the dense pair adds minutes and its windows are
-                # hunted offline (tools/hunt_standalone.py --sha-rounds);
-                # BASELINE.md surfaces them from history either way.
-                dense_rounds = int(os.environ.get("SPARK_GRAFT_DENSE_ROUNDS", "0"))
-                if dense_rounds > 1:
-                    dense = run_standalone_scaling(
-                        events_path, tmp,
-                        cores_per_worker=STANDALONE_CORES_PER_WORKER,
-                        run_timeout_s=RUN_TIMEOUT_S,
-                        sha_rounds=dense_rounds,
-                    )
-                    append_history(dense)
-                    result["standalone_dense"] = {
-                        k: dense.get(k) for k in (
-                            "sha_rounds", "speedup_lo_to_hi", "cpu_ceiling",
-                            "eff_vs_cpu_ceiling", "grant_drift", "valid")
-                    }
-            except Exception as e:  # noqa: BLE001 — report, never die
-                standalone = {"mode": "standalone", "failed": repr(e)[:300]}
-            result["standalone_scaling"] = standalone
-            emit()
-            # pinned compute-dense pair (box-partition experiment): every
-            # worker taskset to a disjoint core slice, fold-dense map
-            # stage, so the hi level owns 4x the cores outright and CPU —
-            # which genuinely multiplied — governs. The RAW efficiency of
-            # this pair is the round's strongest single-box scaling
-            # number (measured median 0.819 across r5 windows). Own try;
-            # small (150k-event) fold input so the pair costs ~6 min.
-            if os.environ.get("SPARK_GRAFT_PINNED_DENSE", "1") != "0":
-                try:
-                    from standalone_cluster import (append_history,
-                                                    run_standalone_scaling)
-
-                    fold_events = os.path.join(tmp, "fold_events")
-                    gen_cdc_input(fold_events, 150000)
-                    pinned = run_standalone_scaling(
-                        fold_events, os.path.join(tmp, "pinned"),
-                        cores_per_worker=STANDALONE_CORES_PER_WORKER,
-                        run_timeout_s=RUN_TIMEOUT_S,
-                        sha_rounds=4000, sha_mode="fold",
-                        midpair_gate_s=180.0, pin_cpus=True,
-                    )
-                    append_history(pinned)
-                    result["standalone_pinned_dense"] = {
-                        k: pinned.get(k) for k in (
-                            "pin_cpus", "sha_rounds", "sha_mode", "events",
-                            "speedup_lo_to_hi", "scaling_efficiency_raw",
-                            "eff_vs_cpu_ceiling", "eff_vs_delivered_cpu",
-                            "grant_drift", "valid", "strict_valid", "failed")
-                        if k in pinned
-                    }
-                except Exception as e:  # noqa: BLE001
-                    result["standalone_pinned_dense"] = {
-                        "failed": repr(e)[:300]}
-                emit()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    # adversarial skew phase LAST among measured phases: if an external
-    # timeout lands here, the north-rule scaling evidence above is already
-    # emitted and safe
-    skew = None
-    if os.environ.get("SPARK_GRAFT_SKEW", "1") != "0":
-        skew_tmp = tempfile.mkdtemp(prefix="skew_bench_")
-        try:
-            skew = run_skew_replay(skew_tmp)
-            result["skew_replay"] = skew
-            emit()
-        finally:
-            shutil.rmtree(skew_tmp, ignore_errors=True)
-
-    write_bench_md(times, cdc, buckets, standalone, headline_gate, skew)
-    result["partial"] = False
-    emit()  # final line pair; emit() ends with the compact driver-parseable line
-
-
-def report_only() -> None:
-    """Regenerate BENCH/BASELINE.md from the LAST full run's phase inputs
-    (BENCH/last_inputs.json) plus the CURRENT history files — the cohort /
-    strict-tier / delivered-CPU sections re-read BENCH/*_history.jsonl at
-    write time, so standalone-hunt windows appended since the last full
-    bench show up without re-running any measured phase."""
-    with open(os.path.join(ROOT, "BENCH", "last_inputs.json")) as f:
-        d = json.load(f)
-    write_bench_md(d["times"], d["cdc"], d.get("buckets"),
-                   d.get("standalone"), d.get("headline_gate"), d.get("skew"))
-    print(json.dumps({"report_only": True,
-                      "baseline_md": os.path.join(ROOT, "BENCH", "BASELINE.md")}))
+        "replay_pair": {
+            "events": r_lo["events"],
+            "lo_cores": lo,
+            "hi_cores": hi,
+            "lo_events_per_sec": r_lo["events_per_sec"],
+            "hi_events_per_sec": r_hi["events_per_sec"],
+            "speedup": round(speedup, 3),
+            "efficiency_raw": round(speedup / (hi / lo), 3),
+        },
+        "host": host_stamp(),
+    }))
 
 
 if __name__ == "__main__":
-    if "--report-only" in sys.argv:
-        report_only()
-    else:
-        main()
+    main()

@@ -4,8 +4,7 @@ engine shipped via spark-submit --py-files, replay result asserted.
 Complements tests/test_submit.py (local[k] submit): here the executor is a
 REAL separate JVM registered with a standalone master — the closest this
 sandbox gets to the north rule's multi-executor cluster. One worker only,
-to bound suite wall time; the 1-vs-4-worker scaling pair runs in bench.py
-(tools/standalone_cluster.py `run_standalone_scaling`)."""
+to bound suite wall time."""
 
 from __future__ import annotations
 
@@ -46,27 +45,3 @@ def test_standalone_cluster_replay(spark, tmp_path):
     workdirs = list((tmp_path / "cluster" / "worker0").rglob("stderr"))
     assert workdirs, "no executor launched under the worker's work-dir"
     assert json.load(open(out))["events"] == 2_000
-
-
-def test_strict_window_tier_classification():
-    """Strict tier is host-telemetry-only: live-grant agreement + low steal;
-    missing telemetry (pre-monitor rows) can never strict-qualify."""
-    from standalone_cluster import is_strict
-
-    base = {
-        "valid": True, "cores_per_worker": 2,
-        "executors_lo": 1, "executors_hi": 4,
-        "live_grant_drift": 1.02,
-        "steal_cores_lo": 0.05, "steal_cores_hi": 0.1,
-    }
-    assert is_strict(base)
-    # hypervisor preempted the hi level: steal over 5% of its 8 cores
-    assert not is_strict({**base, "steal_cores_hi": 0.88})
-    # grant moved between the levels
-    assert not is_strict({**base, "live_grant_drift": 1.11})
-    # loose-invalid can never be strict
-    assert not is_strict({**base, "valid": False})
-    # rows recorded before the live monitor / CPU account landed
-    assert not is_strict({**base, "live_grant_drift": None})
-    assert not is_strict({k: v for k, v in base.items()
-                          if k != "steal_cores_hi"})

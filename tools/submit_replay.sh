@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Package the engine as a zip and run the CDC replay via
 # `spark-submit --py-files`, the deployment shape the north rule prescribes
-# for multi-executor clusters. Locally SPARK_MASTER defaults to local[8];
+# for multi-executor clusters. Locally SPARK_MASTER defaults to
+# local[$SPARK_GRAFT_CPUS], which defaults to nproc;
 # on a cluster set SPARK_MASTER (or submit through your cluster's conf).
 #
 # Usage: tools/submit_replay.sh --events <parquet_dir> --workdir <dir> \
@@ -12,7 +13,7 @@ ZIP="$(mktemp -u /tmp/arches_rascoll_etl_spark_XXXXXX).zip"
 trap 'rm -f "$ZIP"' EXIT
 (cd "$ROOT" && zip -qr "$ZIP" arches_rascoll_etl_spark -x '*__pycache__*')
 
-CORES="${SPARK_GRAFT_CPUS:-8}"
+CORES="${SPARK_GRAFT_CPUS:-$(nproc)}"
 exec spark-submit \
   --master "${SPARK_MASTER:-local[$CORES]}" \
   --py-files "$ZIP" \
