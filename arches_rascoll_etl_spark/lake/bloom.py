@@ -1,6 +1,6 @@
 """Per-data-file key Bloom filters — manifest-level file skipping for
 point lookups (the Iceberg *puffin* blob / Delta deletion-vector-sidecar
-analogue, inlined into the JSON manifest at sandbox scale).
+analogue, stored as JSON sidecars the manifest points at).
 
 Why this exists: :meth:`SnapshotTable.read_keys` already prunes at two
 levels — bucket (manifest file lists) and row group (``In`` pushdown into

@@ -247,15 +247,14 @@ class SnapshotTable(LakeTable):
         # Keeps the steady-state merge loop free of a per-commit parent-
         # manifest re-read (pure serial driver cost at high merge rates).
         self._stats_cache: tuple[int | None, dict | None] = (None, None)
-        # same carry-cache idea for blooms (see _stats_cache note):
-        # (version, (inline legacy blooms, sidecar refs))
-        self._bloom_cache: tuple[int | None, tuple[dict, dict] | None] = (None, None)
+        # same carry-cache idea for bloom sidecar refs (see _stats_cache note)
+        self._bloom_cache: tuple[int | None, dict | None] = (None, None)
         # bloom sidecar contents by filename, read-once per handle
         self._sidecar_cache: dict[str, dict] = {}
         # commit-instant cache for version_as_of: committed manifests are
         # immutable (CAS-linked), so an instant read once is valid for the
         # handle's lifetime — repeated AS-OF resolution must not re-parse
-        # every manifest (which may carry inline stats/blooms) per call
+        # every manifest (which may carry inline stats) per call
         self._instant_cache: dict[int, float] = {}
         os.makedirs(os.path.join(path, "manifests"), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
@@ -346,11 +345,7 @@ class SnapshotTable(LakeTable):
         stats = self._collect_file_stats(parent, files, delta_files)
         if stats:
             m["file_stats"] = stats
-        inline_blooms, bloom_refs = self._collect_file_blooms(
-            parent, files, delta_files
-        )
-        if inline_blooms:  # legacy in-manifest blooms, carried verbatim
-            m["file_blooms"] = inline_blooms
+        bloom_refs = self._collect_bloom_refs(parent, files, delta_files)
         if bloom_refs:
             m["bloom_refs"] = bloom_refs
         return m
@@ -393,37 +388,32 @@ class SnapshotTable(LakeTable):
                             out[f] = st
         return out
 
-    def _collect_file_blooms(
+    def _collect_bloom_refs(
         self, parent: int | None, files: dict, delta_files: dict | None
-    ) -> tuple[dict, dict]:
-        """Per-file key Bloom filters for the new manifest, as
-        ``(inline, refs)``. ``refs`` is {relpath: sidecar filename} — the
-        puffin-style layout: the manifest carries only string pointers,
-        the filter BYTES live in one ``manifests/blooms-*.json`` sidecar
+    ) -> dict:
+        """Per-file key Bloom filters for the new manifest, as {relpath:
+        sidecar filename} — the puffin-style layout: the manifest carries
+        only string pointers, the filter BYTES live in one
+        ``manifests/blooms-*.json`` sidecar
         written per commit for that commit's new files and shared by
         every later manifest that still references them, so manifest
         size stays O(files), not O(files × bloom bytes), and readers
         fetch filter bytes only for the buckets they actually probe.
-        ``inline`` carries any legacy in-manifest blooms verbatim.
-        Both are carried forward by relative path for surviving files
+        Refs are carried forward by relative path for surviving files
         (even when THIS handle has blooms disabled — a bloom-less writer
         must not strip another writer's skipping metadata, same rule as
         _collect_file_stats); new files get a fresh bloom via one
         distributed pass when ``key_bloom_fpp`` is set."""
-        c_inline: dict = {}
         c_refs: dict = {}
         if parent is not None:
             cached_v, cached = self._bloom_cache
             if cached_v == parent and cached is not None:
-                c_inline, c_refs = cached
+                c_refs = cached
             else:
                 with open(self._manifest_path(parent)) as f:
-                    pm = json.load(f)
-                c_inline = pm.get("file_blooms") or {}
-                c_refs = pm.get("bloom_refs") or {}
-        if not (c_inline or c_refs or self.key_bloom_fpp):
-            return {}, {}
-        inline: dict = {}
+                    c_refs = json.load(f).get("bloom_refs") or {}
+        if not (c_refs or self.key_bloom_fpp):
+            return {}
         refs: dict = {}
         fresh: dict[str, str] = {}
         for fmap in (files, delta_files or {}):
@@ -431,8 +421,6 @@ class SnapshotTable(LakeTable):
                 for f in fl:
                     if f in c_refs:
                         refs[f] = c_refs[f]
-                    elif f in c_inline:
-                        inline[f] = c_inline[f]
                     elif self.key_bloom_fpp:
                         fresh[f] = os.path.join(self.path, f)
         if fresh:
@@ -451,18 +439,16 @@ class SnapshotTable(LakeTable):
                 self._sidecar_cache[name] = built
                 for rel in built:
                     refs[rel] = name
-        return inline, refs
+        return refs
 
     def _blooms_for(self, m: dict, files: list[str]) -> dict:
-        """{relpath: bloom} for JUST the requested files: legacy inline
-        entries plus sidecar-ref'd ones. Each needed sidecar is read once
-        per handle — a point lookup touches only the probed buckets'
-        sidecars, never the table's full bloom bytes. A missing sidecar
-        (GC raced us) degrades to no pruning for its files, never to a
-        wrong answer."""
-        inline = m.get("file_blooms") or {}
+        """{relpath: bloom} for JUST the requested files, from the sidecars
+        their refs name. Each needed sidecar is read once per handle — a
+        point lookup touches only the probed buckets' sidecars, never the
+        table's full bloom bytes. A file without a bloom (or whose sidecar
+        GC raced us) is simply not pruned, never answered wrongly."""
         refs = m.get("bloom_refs") or {}
-        out = {f: inline[f] for f in files if f in inline}
+        out: dict = {}
         needed: dict[str, list[str]] = {}
         for f in files:
             r = refs.get(f)
@@ -560,10 +546,7 @@ class SnapshotTable(LakeTable):
         # step needs no parent-manifest re-read (see _collect_file_stats);
         # set only after the link wins, so a lost race never poisons it
         self._stats_cache = (version, manifest.get("file_stats") or {})
-        self._bloom_cache = (
-            version,
-            (manifest.get("file_blooms") or {}, manifest.get("bloom_refs") or {}),
-        )
+        self._bloom_cache = (version, manifest.get("bloom_refs") or {})
 
     def exists(self) -> bool:
         return self._current_version() is not None
@@ -732,10 +715,7 @@ class SnapshotTable(LakeTable):
         version = m["version"]
         self._instant_cache[version] = m["committed_at"]
         self._stats_cache = (version, m.get("file_stats") or {})
-        self._bloom_cache = (
-            version,
-            (m.get("file_blooms") or {}, m.get("bloom_refs") or {}),
-        )
+        self._bloom_cache = (version, m.get("bloom_refs") or {})
         return version
 
     def discard_staged(self, wap_id: str) -> None:
@@ -1790,34 +1770,7 @@ class SnapshotTable(LakeTable):
         self._bid_cache = (None, None)
         return cur + 1
 
-    def key_stats(self, batch: DataFrame) -> list | None:
-        """Merge's job 1 (per-bucket event counts from key columns cast to
-        the STORED key dtypes), runnable AHEAD of the merge — e.g. a replay
-        driver overlaps batch b+1's stats job with batch b's apply job,
-        removing the per-batch driver-serial stats floor from the ingest
-        cadence. Safe to precompute because stored key dtypes are immutable
-        (``_merge_schemas`` refuses key widening — bucket-hash safety), so
-        no merge that commits in between can invalidate the cast targets.
-        Returns None when the table does not exist yet (the first merge
-        may CREATE it with the batch's own key dtypes — only that merge
-        knows which dtypes it will store)."""
-        if not self.exists():
-            return None
-        stored = T.StructType.fromJson(
-            self._load_manifest(self._current_version())["schema"]
-        )
-        keys_cast = batch.select(
-            *[F.col(k).cast(stored[k].dataType).alias(k) for k in self.key_cols]
-        )
-        return (
-            keys_cast
-            .groupBy(self._bucket_col(keys_cast).alias(_BUCKET))
-            .agg(F.count("*").alias("n_events"))
-            .collect()
-        )
-
     def merge(self, batch: DataFrame, batch_id: str, summary: dict | None = None,
-              precomputed_stats: list | None = None,
               mode: str | None = None,
               stage_as: str | None = None) -> MergeStats:
         """Apply one change batch. Two Spark jobs, no caching barrier:
@@ -1901,23 +1854,17 @@ class SnapshotTable(LakeTable):
             new_schema = batch_schema
 
         # ---- job 1: affected buckets + rows_in, key columns only,
-        #      keys cast to the merged (== stored) dtypes. A caller that
-        #      already ran key_stats() for this exact batch (replay's
-        #      stats-prefetch overlap) hands the rows in; the cast targets
-        #      are identical because stored key dtypes never change. ----
+        #      keys cast to the merged (== stored) dtypes ----
         t_stats = time.time()
-        if precomputed_stats is not None:
-            bucket_rows = precomputed_stats
-        else:
-            keys_cast = batch.select(
-                *[F.col(k).cast(new_schema[k].dataType).alias(k) for k in self.key_cols]
-            )
-            bucket_rows = (
-                keys_cast
-                .groupBy(self._bucket_col(keys_cast).alias(_BUCKET))
-                .agg(F.count("*").alias("n_events"))
-                .collect()
-            )
+        keys_cast = batch.select(
+            *[F.col(k).cast(new_schema[k].dataType).alias(k) for k in self.key_cols]
+        )
+        bucket_rows = (
+            keys_cast
+            .groupBy(self._bucket_col(keys_cast).alias(_BUCKET))
+            .agg(F.count("*").alias("n_events"))
+            .collect()
+        )
         stats_ms = (time.time() - t_stats) * 1000
         rows_in = int(sum(r["n_events"] for r in bucket_rows))
         affected = sorted(int(r[_BUCKET]) for r in bucket_rows)
@@ -2010,8 +1957,7 @@ class SnapshotTable(LakeTable):
         # each reducer O(map_partitions), not O(events)). Compared to the
         # previous shape (pre-collapse agg + explicit repartition + second
         # agg) this deletes one full aggregation and one exchange per
-        # merge — profiled at +30% apply throughput, and fewer barriers is
-        # exactly what the N→4N scaling criterion rewards.
+        # merge — profiled at +30% apply throughput.
         # Narrow batches (affected buckets ≪ n_buckets) must not pay an
         # n_buckets-task exchange: at 4096 buckets a dozen-key batch would
         # schedule 4096 mostly-empty tasks per merge. Below half-occupancy,

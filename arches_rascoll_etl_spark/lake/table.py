@@ -40,9 +40,12 @@ class MergeStats:
     # written and a staged manifest records them, but the table head did
     # not move — publish_staged(wap_id) fast-forwards it after audit
     staged_as: str | None = None
-    # per-phase wall times (profiling the scaling bottleneck): the key-only
-    # stats job, the fused apply job (scan+LWW+write), and manifest commit
+    # per-phase wall times: the key-only stats job, the fused apply job
+    # (scan+LWW+write), and manifest commit
     phase_ms: dict[str, float] = field(default_factory=dict)
+    # merge calls this result took, including ones lost to a concurrent
+    # commit (set by the replay driver's conflict retry)
+    attempts: int = 1
 
     def as_dict(self) -> dict[str, Any]:
         return dict(self.__dict__)

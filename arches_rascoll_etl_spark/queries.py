@@ -2881,9 +2881,11 @@ def q79(spark, sf):
     parse_maxwell) — the OTHER common MySQL binlog-tail format: flat
     ``{type, ts, xid, data, old}`` messages with the full row image in
     ``data`` even for deletes, ``bootstrap-insert`` as the snapshot op,
-    and the total order synthesized from (ts, xid). Same output shape as
-    the Debezium adapter (q58), so connector formats swap freely upstream
-    of the quarantine → LWW-merge pipeline. A deterministic subset
+    and the total order synthesized from (ts, xid). Its output is a
+    superset of the Debezium adapter's (q58): the shared columns match by
+    name, plus ``commit_ts``/``commit_xid``, so the two connector formats
+    combine with ``unionByName(allowMissingColumns=True)`` upstream of the
+    quarantine → LWW-merge pipeline. A deterministic subset
     (event_id % 113) is truncated mid-JSON and must surface as the
     NULL-op quarantine group."""
     from pyspark.sql import types as T

@@ -27,13 +27,9 @@ def partition_lineage(df: DataFrame, content_col: str | None = "content") -> lis
     aggs = [F.count("*").alias("rows")]
     if content_col and content_col in df.columns:
         aggs.append(F.sum(F.length(content_col)).alias("content_bytes"))
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(*aggs)
-        .orderBy("partition_id")
-        .collect()
-    )
-    return [r.asDict() for r in rows]
+    # a few dozen rows: sort on the driver, not with a distributed orderBy
+    rows = df.groupBy(F.spark_partition_id().alias("partition_id")).agg(*aggs).collect()
+    return sorted((r.asDict() for r in rows), key=lambda d: d["partition_id"])
 
 
 class LineageLog:

@@ -33,26 +33,55 @@ class InjectedFailure(RuntimeError):
     """Raised by tests to simulate a mid-replay crash."""
 
 
-def _merge_with_retry(table: LakeTable, df: DataFrame, bid: str, attempts: int = 3,
-                      precomputed_stats: list | None = None):
+def _merge_with_retry(table: LakeTable, df: DataFrame, bid: str, attempts: int = 3):
     """Apply one batch, retrying on optimistic-concurrency conflicts.
 
     A CommitConflictError means another writer claimed our snapshot version
     first; the merge is simply redone against the new head — safe because
     application is idempotent on batch id (if the *other* writer applied
-    this very batch, the redo is a no-op skip). Precomputed key stats stay
-    valid across retries: they depend only on the batch and the stored key
-    dtypes, which no concurrent commit can change."""
+    this very batch, the redo is a no-op skip). The returned stats record
+    how many attempts the merge took."""
     from ..lake.parquet_snapshot import CommitConflictError
 
-    kw = {"precomputed_stats": precomputed_stats} if precomputed_stats is not None else {}
-    for attempt in range(attempts):
+    for attempt in range(1, attempts + 1):
         try:
-            return table.merge(df, batch_id=bid, **kw)
+            stats = table.merge(df, batch_id=bid)
         except CommitConflictError:
-            if attempt == attempts - 1:
+            if attempt == attempts:
                 raise
-    raise AssertionError("unreachable")
+        else:
+            stats.attempts = attempt
+            return stats
+
+
+def _split_dead_letters(table: LakeTable, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(valid, malformed) halves of a batch under ``table``'s key, ordering
+    and op columns (operators/quarantine.py)."""
+    from ..operators.quarantine import split_quarantine
+
+    return split_quarantine(
+        df,
+        list(getattr(table, "key_cols", ())),
+        list(getattr(table, "order_cols", ())),
+        getattr(table, "op_col", None),
+    )
+
+
+def _apply_batch(table: LakeTable, df: DataFrame, bid: str,
+                 quarantine_table: LakeTable | None = None,
+                 bad: DataFrame | None = None):
+    """Merge a batch's malformed half into ``quarantine_table`` under
+    ``q-<bid>``, then the batch into ``table`` under ``bid``. Quarantine
+    first: an applied main batch always has its dead letters landed, and
+    both merges are idempotent on their batch ids, so every crash window
+    resumes cleanly."""
+    if bad is not None:
+        from ..operators.quarantine import as_quarantine_rows
+
+        _merge_with_retry(
+            quarantine_table, as_quarantine_rows(bad, quarantine_table, bid), f"q-{bid}"
+        )
+    return _merge_with_retry(table, df, bid)
 
 
 @dataclass
@@ -74,10 +103,8 @@ def replay(
     batch_provider: Callable[[int], DataFrame],
     batch_ids: Iterable[int],
     lineage: LineageLog | None = None,
-    collect_partition_lineage: bool = True,
     fail_before_merge: int | None = None,
     fail_before_checkpoint: int | None = None,
-    prefetch_stats: bool = True,
     quarantine_table: LakeTable | None = None,
     txn_col: str | None = None,
     txn_end_col: str | None = None,
@@ -85,30 +112,21 @@ def replay(
 ) -> ReplayResult:
     """Apply each batch exactly once, resumable from the checkpoint.
 
+    Per batch, in order: quarantine split, txn split of the valid half,
+    dead-letter merge, main merge, partition lineage, checkpoint record.
+
     ``fail_before_merge=k`` / ``fail_before_checkpoint=k`` inject a crash
     for kill/resume tests — before the lake commit of batch k, or after the
     lake commit but before the checkpoint record (the dangerous window).
 
-    ``prefetch_stats`` overlaps batch b+1's stats job (merge phase 1 —
-    per-bucket counts on key columns, a driver-blocking collect) with batch
-    b's apply job in a second driver thread. The stats job depends only on
-    the batch and the table's IMMUTABLE stored key dtypes (key widening is
-    refused), never on the data batch b writes, so the overlap cannot
-    change any result — it removes a driver-serial floor from the ingest
-    cadence (at a 1000-executor cadence every serial driver phase between
-    batches is idle cluster time). Applies to tables exposing
-    ``key_stats`` (SnapshotTable); others run the stats inline as before.
-
     ``quarantine_table``: dead-letter sink for malformed events (NULL key,
     NULL ordering column, unknown op — operators/quarantine.py). When set,
-    every batch is split BEFORE stats/merge see it: the valid half drives
-    the main merge (and the prefetched stats, so affected-bucket sets and
-    rows_in never count diverted rows), the malformed half is merged into
-    ``quarantine_table`` under batch id ``q-<bid>`` BEFORE the main merge,
-    so every crash window resumes cleanly: both merges are idempotent on
-    their lake batch ids, and ordering quarantine-first means an applied
-    main batch always has its quarantine rows landed. On a healthy stream
-    the quarantine merge is the lake's cheap empty-batch path.
+    every batch is split BEFORE anything else sees it: the valid half
+    drives the main merge (so affected-bucket sets and rows_in never count
+    diverted rows), the malformed half is merged into ``quarantine_table``
+    under batch id ``q-<bid>`` BEFORE the main merge (``_apply_batch``). On
+    a healthy stream the quarantine merge is the lake's cheap empty-batch
+    path.
 
     ``txn_col``: transaction-boundary-consistent application (CDC
     atomicity — operators/txn.py). Each batch unions the previous batch's
@@ -121,170 +139,99 @@ def replay(
     and no intermediate snapshot ever exposes a partial source
     transaction. ``txn_flush=True`` applies the final carryover after the
     last batch under a deterministic ``txnflush-<bid>`` id (finite-replay
-    convenience; a live tail leaves it pending). Stats prefetch is
-    disabled in txn mode: a batch's apply set depends on the previous
-    batch's carryover, which is unknown at prefetch time.
+    convenience; a live tail leaves it pending).
     """
     import os
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
 
     res = ReplayResult()
     t_start = time.time()
-    quarantined: dict[int, DataFrame] = {}
-    if quarantine_table is not None:
-        from ..operators.quarantine import split_quarantine
-
-        main_key_cols = list(getattr(table, "key_cols", ()))
-        main_order_cols = list(getattr(table, "order_cols", ()))
-        main_op_col = getattr(table, "op_col", None)
-        inner_provider = batch_provider
-
-        def batch_provider(b: int) -> DataFrame:  # noqa: F811 — deliberate wrap
-            valid, bad = split_quarantine(
-                inner_provider(b), main_key_cols, main_order_cols, main_op_col
-            )
-            quarantined[b] = bad
-            return valid
-
     applied_ckpt = checkpoint.applied_batch_ids()
-    batches = list(batch_ids)
     pending_root = checkpoint.path + ".pending" if txn_col is not None else None
     prev_pending_bid: str | None = None
-    if txn_col is not None:
-        prefetch_stats = False  # apply set depends on the carryover
-        if os.path.isdir(pending_root):
-            # resume/tail-follow: the carryover is the pending parquet of
-            # the LAST APPLIED batch (a stale pending dir from a crash
-            # between pending-write and checkpoint is recomputed, not
-            # trusted), found even when this call's batch list does not
-            # include the already-applied batches
-            for a in reversed(checkpoint.load()["applied"]):
-                if os.path.isdir(os.path.join(pending_root, a)):
-                    prev_pending_bid = a
-                    break
-    pool = (
-        ThreadPoolExecutor(max_workers=1, thread_name_prefix="stats-prefetch")
-        if prefetch_stats and hasattr(table, "key_stats")
-        else None
-    )
-    dfs: dict[int, DataFrame] = {}
-    futs: dict[int, object] = {}
+    if pending_root is not None and os.path.isdir(pending_root):
+        # resume/tail-follow: the carryover is the pending parquet of
+        # the LAST APPLIED batch (a stale pending dir from a crash
+        # between pending-write and checkpoint is recomputed, not
+        # trusted), found even when this call's batch list does not
+        # include the already-applied batches
+        for a in reversed(checkpoint.load()["applied"]):
+            if os.path.isdir(os.path.join(pending_root, a)):
+                prev_pending_bid = a
+                break
 
-    def _submit_stats(nb) -> None:
-        if pool is None or nb in futs:
-            return
-        ndf = dfs.setdefault(nb, batch_provider(nb))
-        # key_stats itself returns None when the table does not exist yet
-        # (its dtypes are only decided by the creating merge)
-        futs[nb] = pool.submit(table.key_stats, ndf)
-
-    try:
-        for i, b in enumerate(batches):
-            bid = str(b)
-            if bid in applied_ckpt:
-                res.skipped.append(bid)
-                if pending_root is not None and os.path.isdir(
-                    os.path.join(pending_root, bid)
-                ):
-                    # an already-applied batch's persisted carryover is
-                    # the resume point for the next unapplied batch
-                    prev_pending_bid = bid
-                continue
-            df = dfs.pop(b, None)
-            if df is None:
-                df = batch_provider(b)
-            if pending_root is not None:
-                from ..operators.txn import split_txn_complete
-
-                spark = df.sparkSession
-                if prev_pending_bid is not None:
-                    pend = spark.read.parquet(
-                        os.path.join(pending_root, prev_pending_bid)
-                    )
-                    df = pend.unionByName(df, allowMissingColumns=True)
-                df, deferred = split_txn_complete(df, txn_col, txn_end_col)
-                # persist the carryover BEFORE the merge: deterministic
-                # split ⇒ a crash anywhere after this line resumes by
-                # re-reading (or identically rewriting) this parquet
-                deferred.repartition(1).write.mode("overwrite").parquet(
-                    os.path.join(pending_root, bid)
-                )
+    for b in batch_ids:
+        bid = str(b)
+        if bid in applied_ckpt:
+            res.skipped.append(bid)
+            if pending_root is not None and os.path.isdir(
+                os.path.join(pending_root, bid)
+            ):
+                # an already-applied batch's persisted carryover is
+                # the resume point for the next unapplied batch
                 prev_pending_bid = bid
-            if fail_before_merge == b:
-                raise InjectedFailure(f"before merge of batch {bid}")
-            nxt = next(
-                (x for x in batches[i + 1:] if str(x) not in applied_ckpt), None
-            )
-            if nxt is not None:
-                _submit_stats(nxt)
-            pre = None
-            fut = futs.pop(b, None)
-            if fut is not None:
-                try:
-                    pre = fut.result()
-                except Exception:  # noqa: BLE001 — prefetch is an optimization only
-                    pre = None
-            t0 = time.time()
-            if quarantine_table is not None:
-                from ..operators.quarantine import as_quarantine_rows
+            continue
+        df = batch_provider(b)
+        bad = None
+        if quarantine_table is not None:
+            df, bad = _split_dead_letters(table, df)
+        if pending_root is not None:
+            from ..operators.txn import split_txn_complete
 
-                _merge_with_retry(
-                    quarantine_table,
-                    as_quarantine_rows(quarantined.pop(b), quarantine_table, bid),
-                    f"q-{bid}",
+            if prev_pending_bid is not None:
+                pend = df.sparkSession.read.parquet(
+                    os.path.join(pending_root, prev_pending_bid)
                 )
-            stats = _merge_with_retry(table, df, bid, precomputed_stats=pre)
-            if fail_before_checkpoint == b:
-                raise InjectedFailure(f"after merge, before checkpoint of batch {bid}")
-            part_lineage = (
-                partition_lineage(df) if (collect_partition_lineage and stats.applied) else []
+                df = pend.unionByName(df, allowMissingColumns=True)
+            df, deferred = split_txn_complete(df, txn_col, txn_end_col)
+            # persist the carryover BEFORE the merge: deterministic
+            # split ⇒ a crash anywhere after this line resumes by
+            # re-reading (or identically rewriting) this parquet
+            deferred.repartition(1).write.mode("overwrite").parquet(
+                os.path.join(pending_root, bid)
             )
-            rec = batch_record(bid, stats.as_dict(), part_lineage, t0)
-            if lineage is not None:
-                lineage.append(rec)
-            checkpoint.record(bid, stats.snapshot_version, rec)
-            if pending_root is not None and os.path.isdir(pending_root):
-                # this batch's carryover subsumes all earlier ones
-                for d in os.listdir(pending_root):
-                    if d != bid:
-                        shutil.rmtree(
-                            os.path.join(pending_root, d), ignore_errors=True
-                        )
-            if stats.applied:
-                res.applied.append(bid)
-                res.events += stats.rows_in
-                res.stats.append(stats)
-            else:
-                res.skipped.append(bid)
-        if (
-            pending_root is not None
-            and txn_flush
-            and prev_pending_bid is not None
-        ):
-            fb = f"txnflush-{prev_pending_bid}"
-            if fb not in applied_ckpt:
-                spark = None
-                pend_path = os.path.join(pending_root, prev_pending_bid)
-                if os.path.isdir(pend_path):
-                    from pyspark.sql import SparkSession
+            prev_pending_bid = bid
+        if fail_before_merge == b:
+            raise InjectedFailure(f"before merge of batch {bid}")
+        t0 = time.time()
+        stats = _apply_batch(table, df, bid, quarantine_table, bad)
+        if fail_before_checkpoint == b:
+            raise InjectedFailure(f"after merge, before checkpoint of batch {bid}")
+        part_lineage = partition_lineage(df) if stats.applied else []
+        rec = batch_record(bid, stats.as_dict(), part_lineage, t0)
+        if lineage is not None:
+            lineage.append(rec)
+        checkpoint.record(bid, stats.snapshot_version, rec)
+        if pending_root is not None and os.path.isdir(pending_root):
+            # this batch's carryover subsumes all earlier ones
+            for d in os.listdir(pending_root):
+                if d != bid:
+                    shutil.rmtree(os.path.join(pending_root, d), ignore_errors=True)
+        if stats.applied:
+            res.applied.append(bid)
+            res.events += stats.rows_in
+            res.stats.append(stats)
+        else:
+            res.skipped.append(bid)
 
-                    spark = SparkSession.getActiveSession()
-                if spark is not None:
-                    pend = spark.read.parquet(pend_path)
-                    t0 = time.time()
-                    stats = _merge_with_retry(table, pend, fb)
-                    rec = batch_record(fb, stats.as_dict(), [], t0)
-                    if lineage is not None:
-                        lineage.append(rec)
-                    checkpoint.record(fb, stats.snapshot_version, rec)
-                    if stats.applied:
-                        res.applied.append(fb)
-                        res.events += stats.rows_in
-                        res.stats.append(stats)
-    finally:
-        if pool is not None:
-            pool.shutdown(wait=False, cancel_futures=True)
+    if txn_flush and prev_pending_bid is not None:
+        fb = f"txnflush-{prev_pending_bid}"
+        pend_path = os.path.join(pending_root, prev_pending_bid)
+        if fb not in applied_ckpt and os.path.isdir(pend_path):
+            from pyspark.sql import SparkSession
+
+            spark = SparkSession.getActiveSession()
+            if spark is not None:
+                t0 = time.time()
+                stats = _apply_batch(table, spark.read.parquet(pend_path), fb)
+                rec = batch_record(fb, stats.as_dict(), [], t0)
+                if lineage is not None:
+                    lineage.append(rec)
+                checkpoint.record(fb, stats.snapshot_version, rec)
+                if stats.applied:
+                    res.applied.append(fb)
+                    res.events += stats.rows_in
+                    res.stats.append(stats)
     res.wall_sec = time.time() - t_start
     return res
 
@@ -320,21 +267,10 @@ def stream_into_table(
     """
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+        bad = None
         if quarantine_table is not None:
-            from ..operators.quarantine import as_quarantine_rows, split_quarantine
-
-            batch_df, bad = split_quarantine(
-                batch_df,
-                list(getattr(table, "key_cols", ())),
-                list(getattr(table, "order_cols", ())),
-                getattr(table, "op_col", None),
-            )
-            _merge_with_retry(
-                quarantine_table,
-                as_quarantine_rows(bad, quarantine_table, f"epoch-{epoch_id}"),
-                f"q-epoch-{epoch_id}",
-            )
-        stats = _merge_with_retry(table, batch_df, f"epoch-{epoch_id}")
+            batch_df, bad = _split_dead_letters(table, batch_df)
+        stats = _apply_batch(table, batch_df, f"epoch-{epoch_id}", quarantine_table, bad)
         checkpoint.record(f"epoch-{epoch_id}", stats.snapshot_version, stats.as_dict())
         if auto_compact_delta_files is not None and hasattr(table, "compact"):
             table.compact(

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from arches_rascoll_etl_spark import oracle
-from arches_rascoll_etl_spark.lake.parquet_snapshot import SnapshotTable
+from arches_rascoll_etl_spark.lake.parquet_snapshot import CommitConflictError, SnapshotTable
 from arches_rascoll_etl_spark.streaming.checkpoint import Checkpoint
 from arches_rascoll_etl_spark.streaming.metrics import LineageLog
 from arches_rascoll_etl_spark.streaming.pipeline import InjectedFailure, replay
@@ -74,37 +74,27 @@ def test_double_replay_is_noop(spark, tmp_path):
     assert tbl.current_version() == v
 
 
-def test_stats_prefetch_equivalence(spark, tmp_path):
-    """prefetch_stats overlaps batch b+1's key-stats job with batch b's
-    apply; the table, snapshot summaries, and per-batch MergeStats must be
-    byte-identical to the serial path (incl. across the schema-evolution
-    batch — key dtypes are immutable, so precomputed stats stay valid)."""
-    tbl_a = SnapshotTable(spark, str(tmp_path / "tbl_a"), n_buckets=8)
-    tbl_b = SnapshotTable(spark, str(tmp_path / "tbl_b"), n_buckets=8)
-    ck_a = Checkpoint(str(tmp_path / "ck_a.json"))
-    ck_b = Checkpoint(str(tmp_path / "ck_b.json"))
-    provider = lambda b: batch_events(spark, CFG, b)  # noqa: E731
-    res_a = replay(tbl_a, ck_a, provider, range(CFG.n_batches), prefetch_stats=True)
-    res_b = replay(tbl_b, ck_b, provider, range(CFG.n_batches), prefetch_stats=False)
-    assert res_a.applied == res_b.applied and res_a.events == res_b.events
-    assert _state_set(tbl_a.read()) == _state_set(tbl_b.read()) == _oracle(spark)
-    for sa, sb in zip(res_a.stats, res_b.stats):
-        assert sa.rows_in == sb.rows_in
-        assert sa.affected_buckets == sb.affected_buckets
-        assert (sa.deletes, sa.upserts) == (sb.deletes, sb.upserts)
+class _ConflictOnceTable(SnapshotTable):
+    """Loses its first merge to a concurrent commit, as a second writer
+    claiming the same snapshot version would make it."""
+
+    conflicts = 1
+
+    def merge(self, batch, batch_id, **kw):
+        if self.conflicts:
+            self.conflicts -= 1
+            raise CommitConflictError(f"simulated conflict on batch {batch_id}")
+        return super().merge(batch, batch_id, **kw)
 
 
-def test_key_stats_contract(spark, tmp_path):
-    """key_stats: None before the table exists (the creating merge decides
-    key dtypes); afterwards equals merge job 1 — including when the batch
-    arrives with a NARROWER key dtype than stored (cast before hashing)."""
-    tbl = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=8)
-    b0 = batch_events(spark, CFG, 0)
-    assert tbl.key_stats(b0) is None
-    tbl.merge(b0, batch_id="0")
-    b1 = batch_events(spark, CFG, 1)
-    rows = tbl.key_stats(b1)
-    affected = sorted(int(r["_bucket"]) for r in rows)
-    assert sum(r["n_events"] for r in rows) == b1.count()
-    stats = tbl.merge(b1, batch_id="1", precomputed_stats=rows)
-    assert stats.applied and stats.affected_buckets == affected
+def test_merge_conflict_retry_is_recorded(spark, tmp_path):
+    tbl = _ConflictOnceTable(spark, str(tmp_path / "tbl"), n_buckets=8)
+    ckpt = Checkpoint(str(tmp_path / "ckpt" / "manifest.json"))
+    lin = LineageLog(str(tmp_path / "ckpt" / "lineage.jsonl"))
+    res = replay(tbl, ckpt, lambda b: batch_events(spark, CFG, b), [0, 1], lineage=lin)
+    assert res.applied == ["0", "1"]
+    assert [s.attempts for s in res.stats] == [2, 1]
+    assert [r["merge"]["attempts"] for r in lin.records()] == [2, 1]
+    assert ckpt.load()["batches"]["0"]["merge"]["attempts"] == 2
+    bids = [s["summary"].get("batch-id") for s in tbl.snapshots()]
+    assert bids == ["0", "1"]  # the retried batch committed exactly once

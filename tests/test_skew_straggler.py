@@ -12,7 +12,7 @@ holds the stage hostage — two ways:
   aggregation collapses the hot key to ≤ n_input_partitions rows before
   the shuffle;
 * empirically: max/median task duration from the status API's taskSummary
-  (the same metric bench.py's skew-replay phase reports), bounded loosely
+  (the metric ``replay_bench.task_skew_metrics`` computes), bounded loosely
   enough for sandbox noise but far below what an unhandled 50%-hot key
   would produce (the hot reducer would run ~hot_share/uniform_share ≈
   250× the median).
