@@ -46,6 +46,7 @@ import math
 import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _MASK64 = (1 << 64) - 1
 _MAX_K = 8
@@ -78,11 +79,13 @@ def build_file_blooms(
     abs_paths: dict[str, str],
     key_cols: list[str],
     fpp: float = 0.01,
+    key_schema: StructType | None = None,
 ) -> dict[str, dict]:
     """Build {relpath: {"m": bits, "k": probes, "fpp": f, "b64": bitset}}
     for the given {relpath: absolute path} map, in ONE distributed job:
     column-pruned scan of the key columns, two JVM hashes, one shuffle
-    keyed by file, numpy bitset assembly per group."""
+    keyed by file, numpy bitset assembly per group. ``key_schema`` (the
+    stored key columns' fields) spares the scan its schema-inference job."""
     if not abs_paths:
         return {}
     # input_file_name() returns a file: URI; match manifests' relative
@@ -90,7 +93,8 @@ def build_file_blooms(
     # they embed the commit id)
     by_suffix = {rel.replace("\\", "/"): rel for rel in abs_paths}
 
-    df = spark.read.parquet(*abs_paths.values()).select(
+    reader = spark.read if key_schema is None else spark.read.schema(key_schema)
+    df = reader.parquet(*abs_paths.values()).select(
         F.input_file_name().alias("_file"), *_hash_cols(key_cols)
     )
 

@@ -65,6 +65,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from typing import Iterable
@@ -345,7 +346,7 @@ class SnapshotTable(LakeTable):
         stats = self._collect_file_stats(parent, files, delta_files)
         if stats:
             m["file_stats"] = stats
-        bloom_refs = self._collect_bloom_refs(parent, files, delta_files)
+        bloom_refs = self._collect_bloom_refs(parent, files, delta_files, schema_json)
         if bloom_refs:
             m["bloom_refs"] = bloom_refs
         return m
@@ -389,7 +390,8 @@ class SnapshotTable(LakeTable):
         return out
 
     def _collect_bloom_refs(
-        self, parent: int | None, files: dict, delta_files: dict | None
+        self, parent: int | None, files: dict, delta_files: dict | None,
+        schema_json: dict,
     ) -> dict:
         """Per-file key Bloom filters for the new manifest, as {relpath:
         sidecar filename} — the puffin-style layout: the manifest carries
@@ -403,7 +405,8 @@ class SnapshotTable(LakeTable):
         (even when THIS handle has blooms disabled — a bloom-less writer
         must not strip another writer's skipping metadata, same rule as
         _collect_file_stats); new files get a fresh bloom via one
-        distributed pass when ``key_bloom_fpp`` is set."""
+        distributed pass when ``key_bloom_fpp`` is set, reading the key
+        columns under the table's ``schema_json`` (no inference job)."""
         c_refs: dict = {}
         if parent is not None:
             cached_v, cached = self._bloom_cache
@@ -426,8 +429,10 @@ class SnapshotTable(LakeTable):
         if fresh:
             from .bloom import build_file_blooms
 
+            schema = T.StructType.fromJson(schema_json)
             built = build_file_blooms(
-                self.spark, fresh, self.key_cols, self.key_bloom_fpp
+                self.spark, fresh, self.key_cols, self.key_bloom_fpp,
+                key_schema=T.StructType([schema[k] for k in self.key_cols]),
             )
             if built:
                 # unique name per build: a CAS-losing commit leaves an
@@ -1770,24 +1775,39 @@ class SnapshotTable(LakeTable):
         self._bid_cache = (None, None)
         return cur + 1
 
+    def _mor_width(self) -> int:
+        """Exchange width of a MOR apply: the largest divisor of
+        ``n_buckets`` not above the default parallelism. A divisor keeps
+        every bucket in exactly one task (pmod(h, w) is a function of
+        pmod(h, n_buckets) when w divides n_buckets), so each commit still
+        writes one delta file per touched bucket, while the task count
+        tracks the cores rather than the bucket count. A divisor below half
+        the parallelism (an odd bucket count) would collapse the apply into
+        a few tasks; the full bucket count is used then."""
+        par = self.spark.sparkContext.defaultParallelism
+        n = self.n_buckets
+        w = max(d for d in range(1, min(par, n) + 1) if n % d == 0)
+        return w if 2 * w >= par else n
+
     def merge(self, batch: DataFrame, batch_id: str, summary: dict | None = None,
               mode: str | None = None,
               stage_as: str | None = None) -> MergeStats:
-        """Apply one change batch. Two Spark jobs, no caching barrier:
+        """Apply one change batch: ONE Spark job under merge-on-read, a
+        key-only stats job plus the apply job under copy-on-write, no
+        caching barrier.
 
-        1. *Stats job* (cheap): per-bucket event counts computed from the
-           KEY COLUMNS ONLY (cast to the stored key dtypes) — a
-           column-pruned scan whose shuffle payload is at most
-           ``n_buckets`` pre-aggregated rows per map task. Yields
-           ``rows_in`` and the affected-bucket set that bounds the COW.
+        1. *Stats job* (COW and the bootstrap merge only, cheap): per-bucket
+           event counts computed from the KEY COLUMNS ONLY (cast to the
+           stored key dtypes) — a column-pruned scan whose shuffle payload
+           is at most ``n_buckets`` pre-aggregated rows per map task.
+           Yields ``rows_in`` and the affected-bucket set that picks the
+           target files the COW apply rewrites.
         2. *Apply job* (fused): union(raw batch, affected target rows) →
-           ONE LWW sort-aggregation whose partial phase combines
-           duplicate/hot keys map-side and whose exchange is pinned to
-           HashPartitioning(key_cols, n_buckets) — the bucket function —
-           so partition id == bucket id and the bucketed write follows
-           with no further exchange. Delete/key stats ride along as
-           ``Observation`` metrics on the write action. Nothing between
-           batch scan and committed files but ONE exchange.
+           ONE LWW sort-aggregation whose exchange hashes the key columns
+           exactly as the bucket function does, so the bucketed write
+           follows with no further exchange. Delete/key stats ride
+           along as ``Observation`` metrics on the write action. Nothing
+           between batch scan and committed files but ONE exchange.
 
         ``mode`` (default: the handle's ``merge_mode``) selects the write
         strategy:
@@ -1797,12 +1817,17 @@ class SnapshotTable(LakeTable):
           and rewrites those buckets, clearing their delta lists. Read
           cost stays O(1 file read per bucket); write cost is
           O(touched-bucket bytes).
-        * ``"mor"`` — merge-on-read (Iceberg v2 analogue): job 2 collapses
-          the batch ALONE (no target scan at all) and appends the result
-          as per-bucket DELTA files; base files are untouched. Write cost
-          is O(batch bytes) — at 100 TB, a scattered 1k-row update batch
-          writes kilobytes instead of rewriting every touched bucket's
-          gigabytes. Reads of delta-bearing buckets pay the LWW fold
+        * ``"mor"`` — merge-on-read (Iceberg v2 analogue): the apply
+          collapses the batch ALONE (no target scan at all) and appends the
+          result as per-bucket DELTA files; base files are untouched. Write
+          cost is O(batch bytes) — at 100 TB, a scattered 1k-row update
+          batch writes kilobytes instead of rewriting every touched
+          bucket's gigabytes. Since no target file has to be chosen, the
+          stats job is skipped: ``rows_in`` is an ``Observation`` count of
+          the batch rows, and the affected buckets are the bucket
+          directories the write produced (LWW keeps one row per key,
+          tombstones included, so that is the set the stats job would
+          compute). Reads of delta-bearing buckets pay the LWW fold
           (``_resolved_stored``) until ``compact()`` folds deltas back
           into base. The batch-id ledger, CAS commit, schema evolution and
           tombstone retention rules are identical in both modes, and a
@@ -1852,47 +1877,61 @@ class SnapshotTable(LakeTable):
         else:
             old_schema = None
             new_schema = batch_schema
+        version = 0 if cur_version is None else cur_version + 1
 
-        # ---- job 1: affected buckets + rows_in, key columns only,
-        #      keys cast to the merged (== stored) dtypes ----
-        t_stats = time.time()
-        keys_cast = batch.select(
-            *[F.col(k).cast(new_schema[k].dataType).alias(k) for k in self.key_cols]
-        )
-        bucket_rows = (
-            keys_cast
-            .groupBy(self._bucket_col(keys_cast).alias(_BUCKET))
-            .agg(F.count("*").alias("n_events"))
-            .collect()
-        )
-        stats_ms = (time.time() - t_stats) * 1000
-        rows_in = int(sum(r["n_events"] for r in bucket_rows))
-        affected = sorted(int(r[_BUCKET]) for r in bucket_rows)
-        affected_set = {str(b) for b in affected}
-
-        if rows_in == 0:
-            # still commit: the batch id must be recorded for resume skips
-            version = 0 if cur_version is None else cur_version + 1
+        def finish(schema_json: dict, files: dict, delta: dict, extra: dict,
+                   phase_ms: dict, **counts) -> MergeStats:
+            """Write the manifest, commit (or stage) it, report the merge."""
+            t_commit = time.time()
             manifest = self._new_manifest(
-                version, cur_version,
-                (old_manifest or {}).get("schema", batch_schema.jsonValue()),
-                (old_manifest or {}).get("files", {}),
-                {"operation": "merge", "batch-id": bid,
+                version, cur_version, schema_json, files,
+                {"operation": "merge", "batch-id": bid, **extra,
                  **({"wap-id": stage_as} if stage_as else {}),
                  **(summary or {})},
-                delta_files=old_delta,
+                delta_files=delta,
             )
             if stage_as is not None:
                 self._commit_staged(manifest, stage_as)
-                return MergeStats(batch_id=bid, applied=False, rows_in=0,
-                                  total_buckets=self.n_buckets,
-                                  snapshot_version=version, staged_as=stage_as,
-                                  skipped_reason="staged",
-                                  wall_ms=(time.time() - t0) * 1000)
-            self._commit(manifest)
-            return MergeStats(batch_id=bid, applied=True, rows_in=0,
-                              total_buckets=self.n_buckets, snapshot_version=version,
-                              wall_ms=(time.time() - t0) * 1000)
+            else:
+                self._commit(manifest)
+            if phase_ms:
+                phase_ms["commit"] = round((time.time() - t_commit) * 1000, 1)
+            return MergeStats(
+                batch_id=bid, applied=stage_as is None, **counts,
+                total_buckets=self.n_buckets, snapshot_version=version,
+                staged_as=stage_as,
+                skipped_reason="staged" if stage_as is not None else None,
+                wall_ms=(time.time() - t0) * 1000, phase_ms=phase_ms,
+            )
+
+        def finish_empty() -> MergeStats:
+            # still commit: the batch id must be recorded for resume skips
+            return finish(
+                (old_manifest or {}).get("schema", batch_schema.jsonValue()),
+                (old_manifest or {}).get("files", {}), old_delta, {}, {},
+                rows_in=0,
+            )
+
+        phase_ms: dict[str, float] = {}
+        if not mor:
+            # ---- job 1 (COW): affected buckets + rows_in, key columns
+            #      only, keys cast to the merged (== stored) dtypes ----
+            t_stats = time.time()
+            keys_cast = batch.select(
+                *[F.col(k).cast(new_schema[k].dataType).alias(k) for k in self.key_cols]
+            )
+            bucket_rows = (
+                keys_cast
+                .groupBy(self._bucket_col(keys_cast).alias(_BUCKET))
+                .agg(F.count("*").alias("n_events"))
+                .collect()
+            )
+            phase_ms["stats"] = round((time.time() - t_stats) * 1000, 1)
+            rows_in = int(sum(r["n_events"] for r in bucket_rows))
+            affected = sorted(int(r[_BUCKET]) for r in bucket_rows)
+            affected_set = {str(b) for b in affected}
+            if rows_in == 0:
+                return finish_empty()
 
         # ---- job 2: fused union + LWW + bucketed write ----
         # MOR reads NO target at all (the whole point: write cost tracks
@@ -1921,10 +1960,17 @@ class SnapshotTable(LakeTable):
             cols.append(F.col(self.op_col))
             return df.select(*cols)
 
+        from pyspark.sql import Observation
+
         # stored rows (incl. retained tombstones) re-enter the merge as
         # events at their own seq, so out-of-order/duplicate batches cannot
         # regress the table; pre-tombstone overwrite files read op=null
         unioned = align(batch)
+        if mor:
+            # rows_in without a job of its own: counted as the batch rows
+            # stream into the apply exchange
+            obs_in = Observation()
+            unioned = unioned.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
         if target is not None:
             target_ev = align(target).withColumn(
                 self.op_col, F.coalesce(F.col(self.op_col), F.lit("U"))
@@ -1948,37 +1994,36 @@ class SnapshotTable(LakeTable):
         )
 
         # ONE sort-agg LWW over the union, whose own shuffle IS the bucket
-        # layout: with spark.sql.shuffle.partitions pinned to n_buckets
-        # (and AQE partition-coalescing off for this job), the aggregation
-        # exchange is HashPartitioning(key_cols, n_buckets) — the exact
-        # bucket function — so partition id == bucket id and the bucketed
-        # write needs no repartition. Partial aggregation still runs
-        # map-side BEFORE the exchange (hot-key combine: a hot repo costs
-        # each reducer O(map_partitions), not O(events)). Compared to the
-        # previous shape (pre-collapse agg + explicit repartition + second
-        # agg) this deletes one full aggregation and one exchange per
-        # merge — profiled at +30% apply throughput.
-        # Narrow batches (affected buckets ≪ n_buckets) must not pay an
-        # n_buckets-task exchange: at 4096 buckets a dozen-key batch would
-        # schedule 4096 mostly-empty tasks per merge. Below half-occupancy,
-        # size the exchange to the affected-bucket count instead — the
-        # explicit repartition's HashPartitioning(key_cols, |affected|)
-        # still satisfies the LWW groupBy's distribution (no extra
-        # exchange), and the partitionBy write splits each task's rows into
-        # per-bucket files (a bucket may then hold >1 file — the manifest
-        # tracks file lists per bucket, so that's already the contract).
-        from pyspark.sql import Observation
-
+        # layout. The exchange width depends on the mode:
+        # * MOR: HashPartitioning(key_cols, _mor_width()) via an explicit
+        #   repartition — a divisor of n_buckets, so every bucket lands in
+        #   one task and each commit writes one key-sorted delta file per
+        #   touched bucket; its apply carries ONLY batch rows, so an
+        #   n_buckets-wide exchange would schedule mostly-empty tasks
+        #   (4096-bucket tables, dozen-key batches).
+        # * COW, full-width batch: spark.sql.shuffle.partitions pinned to
+        #   n_buckets (AQE partition-coalescing off for this job) makes the
+        #   aggregation exchange HashPartitioning(key_cols, n_buckets) — the
+        #   exact bucket function — so partition id == bucket id and the
+        #   bucketed write needs no repartition. Partial aggregation runs
+        #   map-side BEFORE this exchange (hot-key combine: a hot repo
+        #   costs each reducer O(map_partitions), not O(events)).
+        # * COW, narrow batch (affected buckets ≤ n_buckets/2): the
+        #   exchange is sized to the affected-bucket count by an explicit
+        #   repartition, which still satisfies the LWW groupBy's
+        #   distribution (no extra exchange); the partitionBy write splits
+        #   each task's rows into per-bucket files (a bucket may then hold
+        #   >1 file — the manifest tracks file lists per bucket).
         spark = self.spark
-        # MOR always sizes the exchange to the batch's own bucket count —
-        # its apply job carries ONLY batch rows, so an n_buckets-wide
-        # exchange would schedule mostly-empty tasks
-        small = mor or len(affected) <= self.n_buckets // 2
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        old_coal = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        saved_conf: dict[str, str] = {}
+
+        def set_conf(k: str, v: str) -> None:
+            saved_conf[k] = spark.conf.get(k)
+            spark.conf.set(k, v)
+
         t_apply = time.time()
         commit_id = uuid.uuid4().hex[:12]
+        keys = [F.col(k) for k in self.key_cols]
         try:
             # AQE off for the apply job: its exchange partitioning is FIXED
             # by design (it IS the bucket layout / the affected-bucket
@@ -1987,16 +2032,14 @@ class SnapshotTable(LakeTable):
             # execution has nothing to adapt — it only inserts a QueryStage
             # materialization barrier plus a driver re-optimization round
             # trip per merge, pure serial floor at any batch cadence
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            if small:
-                unioned = unioned.repartition(
-                    len(affected), *[F.col(k) for k in self.key_cols]
-                )
+            set_conf("spark.sql.adaptive.enabled", "false")
+            if mor:
+                unioned = unioned.repartition(self._mor_width(), *keys)
+            elif len(affected) <= self.n_buckets // 2:
+                unioned = unioned.repartition(len(affected), *keys)
             else:
-                # full-width batch: pin the aggregation exchange to the
-                # bucket layout (partition id == bucket id, 1 file/bucket)
-                spark.conf.set("spark.sql.shuffle.partitions", str(self.n_buckets))
-                spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+                set_conf("spark.sql.shuffle.partitions", str(self.n_buckets))
+                set_conf("spark.sql.adaptive.coalescePartitions.enabled", "false")
             merged = lww_latest(unioned, self.key_cols, self.order_cols)
             # decode op back to the stored string form (see encode above)
             merged = merged.withColumn(
@@ -2012,18 +2055,27 @@ class SnapshotTable(LakeTable):
                 F.count(F.lit(1)).alias("n_keys"),
                 F.sum(F.when(F.col(self.op_col) == "D", 1).otherwise(0)).alias("n_del"),
             )
-            new_files = self._write_buckets(stored, commit_id, pre_partitioned=True)
+            # a MOR task holds several buckets: sort by key within each so
+            # files stay key-sorted (read_keys' row-group pruning)
+            new_files = self._write_buckets(
+                stored, commit_id, pre_partitioned=True,
+                order_by=keys if mor else None,
+            )
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old_coal)
-            spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        apply_ms = (time.time() - t_apply) * 1000
+            for k, v in saved_conf.items():
+                spark.conf.set(k, v)
+        phase_ms["apply"] = round((time.time() - t_apply) * 1000, 1)
         metrics = obs.get
         n_keys = int(metrics["n_keys"] or 0)
         n_del = int(metrics["n_del"] or 0)
 
-        t_commit = time.time()
         if mor:
+            rows_in = int(obs_in.get["rows_in"] or 0)
+            if rows_in == 0:
+                # the write left an empty commit dir behind
+                shutil.rmtree(os.path.join(self.path, "data", commit_id), ignore_errors=True)
+                return finish_empty()
+            affected = sorted(int(b) for b in new_files)
             # base untouched; this commit's files append to the affected
             # buckets' delta lists
             files = dict(old_manifest["files"])
@@ -2039,40 +2091,8 @@ class SnapshotTable(LakeTable):
             # the COW rewrite folded the affected buckets' deltas into base
             delta = {b: fl for b, fl in old_delta.items() if b not in affected_set}
 
-        version = 0 if cur_version is None else cur_version + 1
-        manifest = self._new_manifest(
-            version, cur_version, new_schema.jsonValue(), files,
-            {"operation": "merge", "batch-id": bid, "mode": mode,
-             **({"wap-id": stage_as} if stage_as else {}),
-             **(summary or {})},
-            delta_files=delta,
-        )
-        if stage_as is not None:
-            self._commit_staged(manifest, stage_as)
-            commit_ms = (time.time() - t_commit) * 1000
-            return MergeStats(
-                batch_id=bid, applied=False, rows_in=rows_in,
-                deletes=n_del, upserts=n_keys - n_del,
-                affected_buckets=affected, total_buckets=self.n_buckets,
-                snapshot_version=version, staged_as=stage_as,
-                skipped_reason="staged",
-                wall_ms=(time.time() - t0) * 1000,
-                phase_ms={
-                    "stats": round(stats_ms, 1),
-                    "apply": round(apply_ms, 1),
-                    "commit": round(commit_ms, 1),
-                },
-            )
-        self._commit(manifest)
-        commit_ms = (time.time() - t_commit) * 1000
-        return MergeStats(
-            batch_id=bid, applied=True, rows_in=rows_in,
-            deletes=n_del, upserts=n_keys - n_del,
-            affected_buckets=affected, total_buckets=self.n_buckets,
-            snapshot_version=version, wall_ms=(time.time() - t0) * 1000,
-            phase_ms={
-                "stats": round(stats_ms, 1),
-                "apply": round(apply_ms, 1),
-                "commit": round(commit_ms, 1),
-            },
+        return finish(
+            new_schema.jsonValue(), files, delta, {"mode": mode}, phase_ms,
+            rows_in=rows_in, deletes=n_del, upserts=n_keys - n_del,
+            affected_buckets=affected,
         )

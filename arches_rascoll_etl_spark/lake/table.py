@@ -40,8 +40,9 @@ class MergeStats:
     # written and a staged manifest records them, but the table head did
     # not move — publish_staged(wap_id) fast-forwards it after audit
     staged_as: str | None = None
-    # per-phase wall times: the key-only stats job, the fused apply job
-    # (scan+LWW+write), and manifest commit
+    # per-phase wall times: the key-only stats job (copy-on-write only —
+    # a merge-on-read merge has no stats phase), the fused apply job
+    # (scan+LWW+write), and manifest build + commit
     phase_ms: dict[str, float] = field(default_factory=dict)
     # merge calls this result took, including ones lost to a concurrent
     # commit (set by the replay driver's conflict retry)
@@ -62,9 +63,12 @@ class LakeTable(ABC):
         """Current table state, or a past snapshot (time travel)."""
 
     @abstractmethod
-    def merge(self, batch: DataFrame, batch_id: str, summary: dict | None = None) -> MergeStats:
+    def merge(self, batch: DataFrame, batch_id: str, summary: dict | None = None,
+              mode: str | None = None) -> MergeStats:
         """Upsert a change batch (LWW per key; op=='D' deletes). Idempotent
-        on ``batch_id``: re-merging an applied batch is a no-op."""
+        on ``batch_id``: re-merging an applied batch is a no-op. ``mode``
+        ("cow" or "mor") overrides the table's write strategy for this
+        batch; None keeps it."""
 
     @abstractmethod
     def committed_batch_ids(self) -> set[str]: ...
@@ -182,7 +186,9 @@ class IcebergTable(LakeTable):
             return self.spark.table(self.identifier)
         return self.spark.read.option("snapshot-id", version).table(self.identifier)
 
-    def merge(self, batch: DataFrame, batch_id: str, summary=None) -> MergeStats:  # pragma: no cover
+    def merge(self, batch: DataFrame, batch_id: str, summary=None,
+              mode=None) -> MergeStats:  # pragma: no cover
+        # Iceberg takes COW vs MOR from the table's write.merge.mode property
         batch.createOrReplaceTempView("_merge_src")
         self.spark.sql(merge_sql(self.identifier, self.key_cols, self.order_cols))
         return MergeStats(batch_id=batch_id, applied=True)

@@ -21,9 +21,11 @@ Reasons, in priority order (an event gets the FIRST that applies):
 * ``bad_op``     — op outside the valid set: apply semantics undefined.
 
 At scale: the classifier is one pass of Column expressions; the split
-is two pushed-down filters over the same scan. The quarantine merge is
-O(bad rows) — on a healthy stream it is the lake's cheap empty-batch
-path (one key-only stats job, batch id still recorded for idempotence).
+is two pushed-down filters over the same scan. Dead letters land as
+merge-on-read deltas (``streaming.pipeline._apply_batch``): one Spark job
+whose write is O(this batch's bad rows); on a healthy stream it writes no
+file and only records the batch id for idempotence. The quarantine table
+compacts like any MOR table.
 """
 
 from __future__ import annotations
@@ -91,7 +93,7 @@ def as_quarantine_rows(
     """Shape a quarantined half for merge into the quarantine table.
 
     The quarantine table is a normal lake table (exactly-once batch ids,
-    COW, time travel), so the source's op column — whose whole problem
+    MOR deltas, time travel), so the source's op column — whose whole problem
     may be that its value is invalid — must not drive LWW delete
     semantics there: it is renamed aside to ``src_<op>`` and the
     quarantine table's own op column is a constant insert.
@@ -133,8 +135,8 @@ def split_constraints(
 
     Same scale shape as split_quarantine: the classifier is pure Column
     predicates fused into the scan, the split is two pushed-down filters,
-    nothing shuffles, and a healthy stream's violations merge is the
-    lake's cheap empty-batch path."""
+    nothing shuffles, and a healthy stream's violations merge writes no
+    file."""
     reason = classify_constraints(constraints)
     tagged = df.withColumn(REASON_COL, reason)
     valid = tagged.where(F.col(REASON_COL).isNull()).drop(REASON_COL)

@@ -33,19 +33,21 @@ class InjectedFailure(RuntimeError):
     """Raised by tests to simulate a mid-replay crash."""
 
 
-def _merge_with_retry(table: LakeTable, df: DataFrame, bid: str, attempts: int = 3):
+def _merge_with_retry(table: LakeTable, df: DataFrame, bid: str, attempts: int = 3,
+                      mode: str | None = None):
     """Apply one batch, retrying on optimistic-concurrency conflicts.
 
     A CommitConflictError means another writer claimed our snapshot version
     first; the merge is simply redone against the new head — safe because
     application is idempotent on batch id (if the *other* writer applied
     this very batch, the redo is a no-op skip). The returned stats record
-    how many attempts the merge took."""
+    how many attempts the merge took. ``mode`` overrides the table's
+    merge mode (None keeps it)."""
     from ..lake.parquet_snapshot import CommitConflictError
 
     for attempt in range(1, attempts + 1):
         try:
-            stats = table.merge(df, batch_id=bid)
+            stats = table.merge(df, batch_id=bid, mode=mode)
         except CommitConflictError:
             if attempt == attempts:
                 raise
@@ -74,12 +76,18 @@ def _apply_batch(table: LakeTable, df: DataFrame, bid: str,
     ``q-<bid>``, then the batch into ``table`` under ``bid``. Quarantine
     first: an applied main batch always has its dead letters landed, and
     both merges are idempotent on their batch ids, so every crash window
-    resumes cleanly."""
+    resumes cleanly. Dead letters land as merge-on-read deltas: one Spark
+    job whose write is O(this batch's dead letters), where a copy-on-write
+    merge would rewrite every touched quarantine bucket — O(all dead
+    letters ever) per batch. Reads resolve LWW, so a repeated raw message
+    still reads as one row, and the quarantine table compacts like any
+    MOR table."""
     if bad is not None:
         from ..operators.quarantine import as_quarantine_rows
 
         _merge_with_retry(
-            quarantine_table, as_quarantine_rows(bad, quarantine_table, bid), f"q-{bid}"
+            quarantine_table, as_quarantine_rows(bad, quarantine_table, bid), f"q-{bid}",
+            mode="mor",
         )
     return _merge_with_retry(table, df, bid)
 
@@ -124,9 +132,10 @@ def replay(
     every batch is split BEFORE anything else sees it: the valid half
     drives the main merge (so affected-bucket sets and rows_in never count
     diverted rows), the malformed half is merged into ``quarantine_table``
-    under batch id ``q-<bid>`` BEFORE the main merge (``_apply_batch``). On
-    a healthy stream the quarantine merge is the lake's cheap empty-batch
-    path.
+    under batch id ``q-<bid>`` BEFORE the main merge (``_apply_batch``),
+    as a merge-on-read delta append: one Spark job sized by the batch's
+    dead letters, a no-file commit that only records the id on a healthy
+    stream.
 
     ``txn_col``: transaction-boundary-consistent application (CDC
     atomicity — operators/txn.py). Each batch unions the previous batch's
@@ -186,8 +195,10 @@ def replay(
             df, deferred = split_txn_complete(df, txn_col, txn_end_col)
             # persist the carryover BEFORE the merge: deterministic
             # split ⇒ a crash anywhere after this line resumes by
-            # re-reading (or identically rewriting) this parquet
-            deferred.repartition(1).write.mode("overwrite").parquet(
+            # re-reading (or identically rewriting) this parquet. Written
+            # as is: one job, no exchange (coalesce(1) would serialize
+            # the batch scan)
+            deferred.write.mode("overwrite").parquet(
                 os.path.join(pending_root, bid)
             )
             prev_pending_bid = bid
@@ -264,6 +275,8 @@ def stream_into_table(
     (no batch id): a crash between merge and compact just leaves debt for
     the next epoch's fold, and tombstone expiry stays an explicit operator
     decision (it needs a correctness watermark, not a cadence policy).
+    The same policy folds ``quarantine_table``, whose dead letters land as
+    MOR deltas whatever the main table's mode.
     """
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
@@ -272,11 +285,14 @@ def stream_into_table(
             batch_df, bad = _split_dead_letters(table, batch_df)
         stats = _apply_batch(table, batch_df, f"epoch-{epoch_id}", quarantine_table, bad)
         checkpoint.record(f"epoch-{epoch_id}", stats.snapshot_version, stats.as_dict())
-        if auto_compact_delta_files is not None and hasattr(table, "compact"):
-            table.compact(
-                expire_tombstones=False,
-                max_delta_files_per_bucket=auto_compact_delta_files,
-            )
+        if auto_compact_delta_files is not None:
+            # dead letters land as MOR deltas too (_apply_batch)
+            for t in (table, quarantine_table):
+                if t is not None and hasattr(t, "compact"):
+                    t.compact(
+                        expire_tombstones=False,
+                        max_delta_files_per_bucket=auto_compact_delta_files,
+                    )
 
     writer = (
         stream_df.writeStream.foreachBatch(_apply)

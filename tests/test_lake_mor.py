@@ -302,3 +302,76 @@ def test_compact_bounds_file_sizes(spark, tmp_table_dir):
     assert not m.get("delta_files")
     assert t.read().count() == 3000
     assert {r["s"] for r in t.read().where(F.col("k") < 100).collect()} == {2}
+
+
+def _new_delta_files(before: dict, after: dict) -> dict[str, list[str]]:
+    """Per bucket, the delta files a MOR commit appended."""
+    return {
+        b: fl[len(before.get(b, [])):]
+        for b, fl in after.items()
+        if len(fl) > len(before.get(b, []))
+    }
+
+
+def test_mor_merge_is_one_spark_job(spark, tmp_table_dir, spark_jobs):
+    """A MOR merge into an existing table is its apply job alone: rows_in
+    is observed on the batch rows and the affected buckets are the bucket
+    directories written. COW keeps the key-only stats job before its apply
+    (two jobs under AQE: the shuffle map stage and the result), since it
+    must know the affected buckets to choose the files it rewrites."""
+    t = _mk(spark, tmp_table_dir)  # no key blooms: their build is a job
+    t.merge(batch_events(spark, CFG, 0), batch_id="b0")
+    st, jobs = spark_jobs(lambda: t.merge(batch_events(spark, CFG, 1), batch_id="b1", mode="mor"))
+    assert len(jobs) == 1
+    assert "stats" not in st.phase_ms
+    assert st.rows_in == batch_events(spark, CFG, 1).count()
+    # the stats job is two jobs under AQE, the session default; pin it,
+    # since concurrent merges earlier in a session can leave it off
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        st, jobs = spark_jobs(
+            lambda: t.merge(batch_events(spark, CFG, 2), batch_id="b2", mode="cow")
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(jobs) == 3
+    assert "stats" in st.phase_ms
+
+
+def test_mor_narrow_exchange_writes_one_sorted_file_per_bucket(spark, tmp_table_dir):
+    """At 512 buckets the MOR exchange is narrower than the bucket count
+    but divides it, so every touched bucket still gets exactly one delta
+    file per commit, key-sorted (read_keys' row-group pruning relies on
+    the order), and affected_buckets is exactly the set written."""
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(spark, tmp_table_dir, n_buckets=512)
+    w = t._mor_width()
+    assert w < t.n_buckets and t.n_buckets % w == 0
+    t.merge(batch_events(spark, CFG, 0), batch_id="b0")
+    before = _delta_map(t)
+    st = t.merge(batch_events(spark, CFG, 1), batch_id="b1", mode="mor")
+    added = _new_delta_files(before, _delta_map(t))
+    assert st.affected_buckets == sorted(int(b) for b in added)
+    assert len(added) > w  # several buckets per exchange task
+    for b, fl in added.items():
+        assert len(fl) == 1, (b, fl)
+        keys = pq.read_table(os.path.join(tmp_table_dir, fl[0]), columns=["repo", "path"])
+        rows = list(zip(*(keys.column(c).to_pylist() for c in ("repo", "path"))))
+        assert rows == sorted(rows)
+    keys = [(r["repo"], r["path"]) for r in batch_events(spark, CFG, 1).limit(5).collect()]
+    live = {tuple(r) for r in t.read().select("repo", "path").collect()}
+    assert t.read_keys(keys).count() == sum(k in live for k in set(keys))
+
+
+def test_empty_mor_batch_records_id_without_data_dir(spark, tmp_table_dir):
+    t = _mk(spark, tmp_table_dir)
+    t.merge(batch_events(spark, CFG, 0), batch_id="b0")
+    v = t.current_version()
+    dirs = set(os.listdir(os.path.join(tmp_table_dir, "data")))
+    st = t.merge(batch_events(spark, CFG, 1).limit(0), batch_id="empty", mode="mor")
+    assert st.applied and st.rows_in == 0 and st.affected_buckets == []
+    assert t.current_version() == v + 1
+    assert "empty" in t.committed_batch_ids()
+    assert set(os.listdir(os.path.join(tmp_table_dir, "data"))) == dirs

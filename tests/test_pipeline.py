@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -98,3 +100,33 @@ def test_merge_conflict_retry_is_recorded(spark, tmp_path):
     assert ckpt.load()["batches"]["0"]["merge"]["attempts"] == 2
     bids = [s["summary"].get("batch-id") for s in tbl.snapshots()]
     assert bids == ["0", "1"]  # the retried batch committed exactly once
+
+
+def test_checkpoint_appends_and_reads_legacy_and_torn_files(tmp_path):
+    """The checkpoint is an append-only log: a record appends one line and
+    leaves earlier bytes alone. A single-object checkpoint of the earlier
+    format still loads, and a line torn by a crash mid-append is skipped
+    (the lake's batch-id ledger covers that batch)."""
+    path = tmp_path / "ckpt.json"
+    path.write_text(json.dumps(
+        {"applied": ["0", "1"], "last_snapshot": 1, "batches": {"0": {"a": 1}, "1": {}}}
+    ))
+    ckpt = Checkpoint(str(path))
+    assert ckpt.applied_batch_ids() == {"0", "1"}
+    ckpt.record("2", 2, {"b": 2})
+    assert ckpt.load() == {
+        "applied": ["0", "1", "2"], "last_snapshot": 2,
+        "batches": {"0": {"a": 1}, "1": {}, "2": {"b": 2}},
+    }
+
+    with open(path, "a") as f:
+        f.write('{"batch": "3", "snaps')  # torn by a crash
+    assert ckpt.load()["applied"] == ["0", "1", "2"]
+    before = path.read_bytes()
+    ckpt.record("3", 3)
+    assert path.read_bytes().startswith(before)
+    ckpt.record("2", 4, {"c": 3})  # a re-record keeps the first position
+    assert ckpt.load() == {
+        "applied": ["0", "1", "2", "3"], "last_snapshot": 4,
+        "batches": {"0": {"a": 1}, "1": {}, "2": {"c": 3}, "3": {}},
+    }

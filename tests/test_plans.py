@@ -124,3 +124,25 @@ def test_deterministic_shuffle_no_single_partition_sort(spark):
     # the single-partition exchange exists only under the tiny counts agg
     single = [seg for seg in plan.splitlines() if "SinglePartition" in seg]
     assert len(single) <= 1, plan
+
+
+def test_mor_merge_apply_has_one_exchange(spark, tmp_path, spark_jobs):
+    """A MOR merge runs ONE query: batch scan → repartition by key (the
+    only exchange) → LWW → sort by bucket and key → bucketed write. Its
+    physical plan is read back from the SQL status store, as executed."""
+    cfg = ChangeLogConfig(n_events=800, n_repos=4, paths_per_repo=20, n_batches=2)
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8)
+    tbl.merge(batch_events(spark, cfg, 0), batch_id="b0")
+    _, jobs = spark_jobs(
+        lambda: tbl.merge(batch_events(spark, cfg, 1), batch_id="b1", mode="mor")
+    )
+    assert len(jobs) == 1
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    plans = [
+        e.physicalPlanDescription().split("\n\n")[0]
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if e.jobs().contains(jobs[0])
+    ]
+    assert len(plans) == 1 and "InsertIntoHadoopFsRelationCommand" in plans[0], plans
+    assert plans[0].count("Exchange") == 1, plans[0]

@@ -255,6 +255,36 @@ def test_stream_mor_auto_compact(spark, tmp_path):
     assert tbl.delta_debt()["max_delta_files"] < 2
 
 
+def test_stream_auto_compact_folds_quarantine_deltas(spark, tmp_path):
+    """Dead letters land as MOR deltas whatever the main table's mode, so
+    the auto-compact policy bounds the quarantine table's delta debt too;
+    its read still holds each dead letter once."""
+    src = str(tmp_path / "src")
+    log = change_log(spark, CFG).withColumn(
+        "repo",
+        F.when(F.col("event_id") % 29 == 0, None).otherwise(F.col("repo")),
+    )
+    log.write.partitionBy("batch_id").parquet(src)
+    stream = (
+        spark.readStream.schema(log.drop("batch_id").schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src + "/batch_id=*")
+    )
+    tbl = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=8)
+    quar = SnapshotTable(
+        spark, str(tmp_path / "quar"),
+        key_cols=["event_id"], order_cols=["event_id"], n_buckets=4,
+    )
+    q = stream_into_table(
+        stream, tbl, Checkpoint(str(tmp_path / "ckpt" / "manifest.json")),
+        str(tmp_path / "spark_ckpt"), quarantine_table=quar, auto_compact_delta_files=2,
+    )
+    q.awaitTermination(120)
+
+    assert quar.read().count() == log.where(F.col("event_id") % 29 == 0).count()
+    assert quar.delta_debt()["max_delta_files"] < 2
+
+
 def test_streaming_dedup_within_watermark(spark, tmp_path):
     """At-least-once re-deliveries of the same event identity — within one
     micro-batch AND across micro-batches inside the watermark horizon —
