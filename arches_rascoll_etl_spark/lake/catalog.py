@@ -1,45 +1,22 @@
-"""SQL/DDL surface over the lake (SURVEY.md §2.1 S9).
+"""SQL view surface over the lake (SURVEY.md §2.1 S9).
 
 The reference manages its relational surface with DDL: a staging schema
 (``prepare_import_schema``, arches_rascoll/utilities.py:62-64) and Arches
 relational views (``ARCHES_REL_VIEW_PREP_SQLS``,
 arches_rascoll/general_configs.py:948-969) that downstream SQL reads. The
-engine's analogue has two halves:
-
-* **Session catalog registration** — expose :class:`SnapshotTable`
-  snapshots as Spark SQL views (current state, time-travel versions, and
-  the tombstone-inclusive raw feed), so any consumer can query the lake
-  with plain ``spark.sql`` — the Spark-native version of "create the
-  relational views before loading" (reference README.md:39-42 runs its
-  DDL first for the same reason).
-* **DDL generation for a real catalog** — when an Iceberg catalog is
-  attached, :func:`iceberg_create_table_sql` emits the ``CREATE TABLE``
-  whose bucket layout matches SnapshotTable's (``bucket(N, keys...)``
-  partition transform), so a SnapshotTable can be promoted to Iceberg
-  with an identical physical design. Pure string builders — testable
-  without the Iceberg jar (like lake.table.merge_sql).
+engine's analogue is session catalog registration: expose
+:class:`SnapshotTable` snapshots as Spark SQL views (current state,
+time-travel versions, and the tombstone-inclusive raw feed), so any
+consumer can query the lake with plain ``spark.sql`` — the Spark-native
+version of "create the relational views before loading" (reference
+README.md:39-42 runs its DDL first for the same reason).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from .parquet_snapshot import SnapshotTable
-
-# Spark SQL type names for DDL generation
-_DDL_SIMPLE = {
-    "string": "STRING",
-    "long": "BIGINT",
-    "integer": "INT",
-    "double": "DOUBLE",
-    "float": "FLOAT",
-    "boolean": "BOOLEAN",
-    "binary": "BINARY",
-    "timestamp": "TIMESTAMP",
-    "timestamp_ntz": "TIMESTAMP_NTZ",
-    "date": "DATE",
-}
 
 
 def register_views(
@@ -57,8 +34,7 @@ def register_views(
     * ``<name>_raw``      — stored rows incl. tombstones + op column, when
                             ``with_raw`` (the CDC-feed view).
 
-    Returns the registered view names. Views are session-scoped (temp) —
-    the catalog-persistent path is the Iceberg DDL below."""
+    Returns the registered view names. Views are session-scoped (temp)."""
     created = []
     table.read().createOrReplaceTempView(name)
     created.append(name)
@@ -74,47 +50,3 @@ def register_views(
         created.append(rname)
     return created
 
-
-def _ddl_type(dt: T.DataType) -> str:
-    simple = _DDL_SIMPLE.get(dt.typeName())
-    return simple if simple is not None else dt.simpleString().upper()
-
-
-def create_schema_sql(schema_name: str) -> str:
-    """``CREATE SCHEMA`` for the staging namespace (reference
-    prepare_import_schema, utilities.py:62-64)."""
-    return f"CREATE SCHEMA IF NOT EXISTS {schema_name}"
-
-
-def iceberg_create_table_sql(
-    identifier: str,
-    schema: T.StructType,
-    key_cols: list[str],
-    n_buckets: int,
-) -> str:
-    """``CREATE TABLE ... USING iceberg`` with the same physical design as
-    the SnapshotTable it would replace: hash-bucketed on the key columns
-    (Iceberg's ``bucket(N, col)`` partition transform — the catalog twin
-    of ``pmod(hash(keys), N)``), so MERGE cost stays bounded by touched
-    buckets after promotion."""
-    cols = ",\n  ".join(f"{f.name} {_ddl_type(f.dataType)}" for f in schema.fields)
-    buckets = ", ".join(f"bucket({n_buckets}, {k})" for k in key_cols)
-    return (
-        f"CREATE TABLE IF NOT EXISTS {identifier} (\n  {cols}\n)\n"
-        f"USING iceberg\nPARTITIONED BY ({buckets})"
-    )
-
-
-def promote_sql(table: SnapshotTable, identifier: str) -> list[str]:
-    """The DDL + DML statement sequence that promotes a SnapshotTable to a
-    real Iceberg table: create schema-equivalent table with matching
-    bucket layout, then the LWW MERGE template used for each batch
-    (lake.table.merge_sql). Ordered — DDL before DML, the reference's
-    'statement order matters' rule (README.md:41-42)."""
-    from .table import merge_sql
-
-    schema = table.schema()
-    return [
-        iceberg_create_table_sql(identifier, schema, table.key_cols, table.n_buckets),
-        merge_sql(identifier, table.key_cols, table.order_cols),
-    ]

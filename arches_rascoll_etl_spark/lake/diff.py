@@ -41,11 +41,7 @@ def _live(t: SnapshotTable, version, buckets=None) -> DataFrame:
     v = t._resolve_version(version)
     if v is None:
         raise FileNotFoundError(f"table {t.path} has no snapshots")
-    m = t._load_manifest(v)
-    df = t._resolved_stored(m, buckets)
-    return df.where(
-        F.coalesce(F.col(t.op_col), F.lit("U")) != "D"
-    ).drop(t.op_col)
+    return t._live(t._resolved_stored(t._load_manifest(v), buckets))
 
 
 def bucket_summaries(

@@ -1,6 +1,8 @@
-"""SnapshotTable — pure-Parquet copy-on-write snapshot table.
+"""SnapshotTable — the engine's lake table: pure-Parquet snapshots.
 
-Iceberg-shaped semantics with zero extra dependencies:
+Every ingest path (replay, the streaming sink, the quarantine dead-letter
+sink) writes into a SnapshotTable. It has Iceberg-shaped semantics with
+zero extra dependencies:
 
 * **Snapshot isolation / atomic CAS commit** — every commit writes immutable
   data files plus a new JSON manifest under a unique attempt name, then
@@ -66,19 +68,23 @@ import json
 import os
 import re
 import shutil
+import threading
 import time
 import uuid
-from typing import Iterable
+from dataclasses import dataclass, field
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.lww import lww_latest
-from .table import LakeTable, MergeStats
 
 _BUCKET = "_bucket"
 _ZV = "_zv"
+
+# held by merge() across its session-conf save, apply job and restore
+_APPLY_CONF_LOCK = threading.Lock()
 
 
 def zorder_key(
@@ -132,6 +138,36 @@ def zorder_key(
 # failure modes this guards against.
 FORMAT_VERSION = 2
 BUCKET_FN_ID = "murmur3-pmod-v1"
+
+
+@dataclass
+class MergeStats:
+    """What one :meth:`SnapshotTable.merge` call did."""
+
+    batch_id: str
+    applied: bool
+    rows_in: int = 0
+    upserts: int = 0
+    deletes: int = 0
+    affected_buckets: list[int] = field(default_factory=list)
+    total_buckets: int = 0
+    snapshot_version: int | None = None
+    wall_ms: float = 0.0
+    skipped_reason: str | None = None
+    # set when the merge was STAGED (write-audit-publish): data files are
+    # written and a staged manifest records them, but the table head did
+    # not move — publish_staged(wap_id) fast-forwards it after audit
+    staged_as: str | None = None
+    # per-phase wall times: the key-only stats job (copy-on-write only —
+    # a merge-on-read merge has no stats phase), the fused apply job
+    # (scan+LWW+write), and manifest build + commit
+    phase_ms: dict[str, float] = field(default_factory=dict)
+    # merge calls this result took, including ones lost to a concurrent
+    # commit (set by the replay driver's conflict retry)
+    attempts: int = 1
+
+    def as_dict(self) -> dict[str, Any]:
+        return dict(self.__dict__)
 
 
 class CommitConflictError(RuntimeError):
@@ -196,7 +232,7 @@ def _merge_schemas(
     return T.StructType(fields)
 
 
-class SnapshotTable(LakeTable):
+class SnapshotTable:
     def __init__(
         self,
         spark: SparkSession,
@@ -265,14 +301,8 @@ class SnapshotTable(LakeTable):
     _MANIFEST_RE = re.compile(r"^v(\d{6})\.json$")
 
     def _current_version(self) -> int | None:
-        try:
-            entries = os.listdir(os.path.join(self.path, "manifests"))
-        except FileNotFoundError:
-            return None
-        versions = [
-            int(m.group(1)) for e in entries if (m := self._MANIFEST_RE.match(e))
-        ]
-        return max(versions) if versions else None
+        versions = self._committed_versions()
+        return versions[-1] if versions else None
 
     def _committed_versions(self) -> list[int]:
         """Every committed snapshot version on disk, ascending — the
@@ -515,14 +545,31 @@ class SnapshotTable(LakeTable):
         """Per-bucket MOR delta file lists of a manifest ({} on pure COW)."""
         return m.get("delta_files") or {}
 
+    def _cas_link(self, content: dict, dest: str, conflict: str) -> None:
+        """Write ``content`` to a unique ``attempt-*`` file, then
+        ``os.link`` it to ``dest`` — atomic, and fails if ``dest`` exists,
+        so exactly one writer claims the name, with complete content.
+        Losing the race raises :class:`CommitConflictError` with message
+        ``conflict``; the attempt file is removed either way."""
+        attempt = os.path.join(
+            self.path, "manifests", f"attempt-{uuid.uuid4().hex[:12]}.json"
+        )
+        with open(attempt, "w") as f:
+            json.dump(content, f)
+        try:
+            os.link(attempt, dest)
+        except FileExistsError:
+            raise CommitConflictError(conflict) from None
+        finally:
+            os.unlink(attempt)
+
     def _commit(self, manifest: dict) -> None:
-        """CAS commit: the manifest is fully written to a unique attempt
-        file, then ``os.link``ed to its canonical ``vNNNNNN.json`` name —
-        link is atomic and fails if the name exists, so exactly one writer
-        claims each version, with complete content (no window where the
-        canonical file exists half-written). Losing the race raises
-        :class:`CommitConflictError`; a crash before the link leaves only
-        an ``attempt-*`` orphan that no reader ever resolves."""
+        """CAS commit: ``_cas_link`` the manifest to its canonical
+        ``vNNNNNN.json`` name, so exactly one writer claims each version,
+        with complete content (no window where the canonical file exists
+        half-written). Losing the race raises :class:`CommitConflictError`;
+        a crash before the link leaves only an ``attempt-*`` orphan that no
+        reader ever resolves."""
         version = manifest["version"]
         # commit instant persisted IN the manifest (Iceberg stores it in
         # table metadata too): mtime-only resolution breaks under rsync/
@@ -532,20 +579,11 @@ class SnapshotTable(LakeTable):
         # version in the past (AS OF just before the rollback must still
         # resolve the rolled-back head, not the re-published state).
         manifest["committed_at"] = time.time()
-        attempt = os.path.join(
-            self.path, "manifests", f"attempt-{uuid.uuid4().hex[:12]}.json"
+        self._cas_link(
+            manifest, self._manifest_path(version),
+            f"version {version} of {self.path} was committed concurrently; "
+            "re-read the head and redo the merge",
         )
-        with open(attempt, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(attempt, self._manifest_path(version))
-        except FileExistsError:
-            os.unlink(attempt)
-            raise CommitConflictError(
-                f"version {version} of {self.path} was committed concurrently; "
-                "re-read the head and redo the merge"
-            ) from None
-        os.unlink(attempt)
         self._instant_cache[version] = manifest["committed_at"]
         # cache THIS handle's committed stats so the next commit's carry
         # step needs no parent-manifest re-read (see _collect_file_stats);
@@ -601,19 +639,10 @@ class SnapshotTable(LakeTable):
         v = self._current_version() if version is None else int(version)
         if v is None or not os.path.exists(self._manifest_path(v)):
             raise FileNotFoundError(f"no snapshot version {v} to tag")
-        attempt = os.path.join(
-            self.path, "manifests", f"attempt-{uuid.uuid4().hex[:12]}.json"
+        self._cas_link(
+            {"name": name, "version": v}, self._tag_path(name),
+            f"tag {name!r} already exists on {self.path}",
         )
-        with open(attempt, "w") as f:
-            json.dump({"name": name, "version": v}, f)
-        try:
-            os.link(attempt, self._tag_path(name))
-        except FileExistsError:
-            raise CommitConflictError(
-                f"tag {name!r} already exists on {self.path}"
-            ) from None
-        finally:
-            os.unlink(attempt)
         return v
 
     def tags(self) -> dict[str, int]:
@@ -653,20 +682,11 @@ class SnapshotTable(LakeTable):
         + link discipline as _commit, but to ``staged-<wap_id>.json`` — the
         table head does not move and the batch id is NOT committed until
         publish_staged() links it to its canonical version name."""
-        attempt = os.path.join(
-            self.path, "manifests", f"attempt-{uuid.uuid4().hex[:12]}.json"
+        self._cas_link(
+            manifest, self._staged_path(wap_id),
+            f"staged snapshot {wap_id!r} already exists on {self.path}; "
+            "publish or discard it first",
         )
-        with open(attempt, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(attempt, self._staged_path(wap_id))
-        except FileExistsError:
-            raise CommitConflictError(
-                f"staged snapshot {wap_id!r} already exists on {self.path}; "
-                "publish or discard it first"
-            ) from None
-        finally:
-            os.unlink(attempt)
 
     def read_staged(self, wap_id: str) -> DataFrame:
         """Live rows of a staged (unpublished) snapshot — the AUDIT half of
@@ -676,11 +696,7 @@ class SnapshotTable(LakeTable):
         with open(self._staged_path(self._check_ref_name(wap_id))) as f:
             m = json.load(f)
         self._validate_manifest(m)
-        return (
-            self._resolved_stored(m)
-            .where(F.coalesce(F.col(self.op_col), F.lit("U")) != "D")
-            .drop(self.op_col)
-        )
+        return self._live(self._resolved_stored(m))
 
     def publish_staged(self, wap_id: str) -> int:
         """Fast-forward the table head to a staged snapshot (the PUBLISH
@@ -697,31 +713,17 @@ class SnapshotTable(LakeTable):
         with open(sp) as f:
             m = json.load(f)
         self._validate_manifest(m)
-        # the commit instant is PUBLISH time, not staging time — rewrite
-        # into a fresh attempt file and link that (same CAS discipline:
-        # the canonical link still fails atomically if the name is taken)
-        m["committed_at"] = time.time()
-        attempt = os.path.join(
-            self.path, "manifests", f"attempt-{uuid.uuid4().hex[:12]}.json"
-        )
-        with open(attempt, "w") as f:
-            json.dump(m, f)
+        # a regular commit: the instant is PUBLISH time, not staging time
         try:
-            os.link(attempt, self._manifest_path(m["version"]))
-        except FileExistsError:
-            os.unlink(attempt)
+            self._commit(m)
+        except CommitConflictError:
             raise CommitConflictError(
                 f"cannot publish staged snapshot {wap_id!r}: the table "
                 f"advanced past its parent (version {m['parent_version']}); "
                 "discard_staged() and re-stage against the new head"
             ) from None
-        os.unlink(attempt)
         os.unlink(sp)
-        version = m["version"]
-        self._instant_cache[version] = m["committed_at"]
-        self._stats_cache = (version, m.get("file_stats") or {})
-        self._bloom_cache = (version, m.get("bloom_refs") or {})
-        return version
+        return m["version"]
 
     def discard_staged(self, wap_id: str) -> None:
         """Drop a staged snapshot after a failed audit. Its data files
@@ -1056,11 +1058,13 @@ class SnapshotTable(LakeTable):
             if version is not None:
                 raise ValueError("pass either version or as_of_ts, not both")
             version = self.version_as_of(as_of_ts)
-        return (
-            self._read_stored(version)
-            .where(F.coalesce(F.col(self.op_col), F.lit("U")) != "D")
-            .drop(self.op_col)
-        )
+        return self._live(self._read_stored(version))
+
+    def _live(self, df: DataFrame) -> DataFrame:
+        """Stored rows minus tombstones, without the op column."""
+        return df.where(
+            F.coalesce(F.col(self.op_col), F.lit("U")) != "D"
+        ).drop(self.op_col)
 
     def _read_stored(self, version: int | str | None = None) -> DataFrame:
         """All stored rows of a snapshot, tombstones included, with op —
@@ -1190,10 +1194,7 @@ class SnapshotTable(LakeTable):
             df = lww_latest(df, self.key_cols, self.order_cols)
         # semi-join against the key set (broadcast — the key list is small)
         out = df.join(_F.broadcast(key_df), on=self.key_cols, how="left_semi")
-        return (
-            out.where(_F.coalesce(_F.col(self.op_col), _F.lit("U")) != "D")
-            .drop(self.op_col)
-        )
+        return self._live(out)
 
     def read_range(
         self, col: str, lo, hi, version: int | None = None
@@ -1233,11 +1234,8 @@ class SnapshotTable(LakeTable):
             b: (fl if deltas.get(b) else [f for f in fl if _may_match(f)])
             for b, fl in m["files"].items()
         }
-        df = self._resolved_stored(pruned)
-        return (
-            df.where(F.coalesce(F.col(self.op_col), F.lit("U")) != "D")
-            .drop(self.op_col)
-            .where(F.col(col).between(F.lit(lo), F.lit(hi)))
+        return self._live(self._resolved_stored(pruned)).where(
+            F.col(col).between(F.lit(lo), F.lit(hi))
         )
 
     # ---------- write ----------
@@ -1348,14 +1346,8 @@ class SnapshotTable(LakeTable):
             or d_from.get(b) != d_to.get(b)
         )
 
-        def live(m: dict) -> DataFrame:
-            df = self._resolved_stored(m, changed)
-            return df.where(
-                F.coalesce(F.col(self.op_col), F.lit("U")) != "D"
-            ).drop(self.op_col)
-
-        old = live(m_from)
-        new = live(m_to)
+        old = self._live(self._resolved_stored(m_from, changed))
+        new = self._live(self._resolved_stored(m_to, changed))
 
         # align the FROM side to the TO schema (evolution adds columns)
         aligned_old = old.select(
@@ -2024,46 +2016,55 @@ class SnapshotTable(LakeTable):
         t_apply = time.time()
         commit_id = uuid.uuid4().hex[:12]
         keys = [F.col(k) for k in self.key_cols]
-        try:
-            # AQE off for the apply job: its exchange partitioning is FIXED
-            # by design (it IS the bucket layout / the affected-bucket
-            # count), the LWW aggregation needs no skew-join splitting
-            # (map-side partial agg already bounds hot keys), so adaptive
-            # execution has nothing to adapt — it only inserts a QueryStage
-            # materialization barrier plus a driver re-optimization round
-            # trip per merge, pure serial floor at any batch cadence
-            set_conf("spark.sql.adaptive.enabled", "false")
-            if mor:
-                unioned = unioned.repartition(self._mor_width(), *keys)
-            elif len(affected) <= self.n_buckets // 2:
-                unioned = unioned.repartition(len(affected), *keys)
-            else:
-                set_conf("spark.sql.shuffle.partitions", str(self.n_buckets))
-                set_conf("spark.sql.adaptive.coalescePartitions.enabled", "false")
-            merged = lww_latest(unioned, self.key_cols, self.order_cols)
-            # decode op back to the stored string form (see encode above)
-            merged = merged.withColumn(
-                self.op_col,
-                F.when(F.col(self.op_col) == 0, F.lit("D"))
-                .when(F.col(self.op_col) == 1, F.lit("I"))
-                .otherwise(F.lit("U")),
-            )
-            stored = merged.withColumn(_BUCKET, self._bucket_col(merged))
-            obs = Observation()
-            stored = stored.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_keys"),
-                F.sum(F.when(F.col(self.op_col) == "D", 1).otherwise(0)).alias("n_del"),
-            )
-            # a MOR task holds several buckets: sort by key within each so
-            # files stay key-sorted (read_keys' row-group pruning)
-            new_files = self._write_buckets(
-                stored, commit_id, pre_partitioned=True,
-                order_by=keys if mor else None,
-            )
-        finally:
-            for k, v in saved_conf.items():
-                spark.conf.set(k, v)
+        # the conf save -> apply -> restore runs under one process-wide
+        # lock: two merges interleaving it would each restore the other's
+        # values and leave them on the shared session
+        with _APPLY_CONF_LOCK:
+            try:
+                # AQE off for the apply job: its exchange partitioning is
+                # FIXED by design (it IS the bucket layout / the affected-
+                # bucket count), the LWW aggregation needs no skew-join
+                # splitting (map-side partial agg already bounds hot keys),
+                # so adaptive execution has nothing to adapt — it only
+                # inserts a QueryStage materialization barrier plus a driver
+                # re-optimization round trip per merge, pure serial floor
+                # at any batch cadence
+                set_conf("spark.sql.adaptive.enabled", "false")
+                if mor:
+                    unioned = unioned.repartition(self._mor_width(), *keys)
+                elif len(affected) <= self.n_buckets // 2:
+                    unioned = unioned.repartition(len(affected), *keys)
+                else:
+                    set_conf("spark.sql.shuffle.partitions", str(self.n_buckets))
+                    set_conf(
+                        "spark.sql.adaptive.coalescePartitions.enabled", "false"
+                    )
+                merged = lww_latest(unioned, self.key_cols, self.order_cols)
+                # decode op back to the stored string form (see encode above)
+                merged = merged.withColumn(
+                    self.op_col,
+                    F.when(F.col(self.op_col) == 0, F.lit("D"))
+                    .when(F.col(self.op_col) == 1, F.lit("I"))
+                    .otherwise(F.lit("U")),
+                )
+                stored = merged.withColumn(_BUCKET, self._bucket_col(merged))
+                obs = Observation()
+                stored = stored.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n_keys"),
+                    F.sum(
+                        F.when(F.col(self.op_col) == "D", 1).otherwise(0)
+                    ).alias("n_del"),
+                )
+                # a MOR task holds several buckets: sort by key within each
+                # so files stay key-sorted (read_keys' row-group pruning)
+                new_files = self._write_buckets(
+                    stored, commit_id, pre_partitioned=True,
+                    order_by=keys if mor else None,
+                )
+            finally:
+                for k, v in saved_conf.items():
+                    spark.conf.set(k, v)
         phase_ms["apply"] = round((time.time() - t_apply) * 1000, 1)
         metrics = obs.get
         n_keys = int(metrics["n_keys"] or 0)

@@ -99,8 +99,8 @@ def as_quarantine_rows(
     quarantine table's own op column is a constant insert.
     """
     out = quarantined.withColumn(SRC_BATCH_COL, F.lit(src_batch_id))
-    op = getattr(table, "op_col", None)
-    if op and op in out.columns:
+    op = table.op_col
+    if op in out.columns:
         out = out.withColumnRenamed(op, f"src_{op}").withColumn(op, F.lit("I"))
     return out
 

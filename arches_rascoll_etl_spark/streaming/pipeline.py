@@ -2,7 +2,7 @@
 
 The batch loop the reference runs by hand (stage → generate SQL → psql in
 order, README.md:29-42) becomes a driver that replays micro-batches of the
-change log into a LakeTable with two-level idempotence:
+change log into a SnapshotTable with two-level idempotence:
 
 1. checkpoint manifest of applied batch ids (fast skip on resume);
 2. the lake's committed ``batch-id`` snapshot summaries (correct skip even
@@ -24,7 +24,7 @@ from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
-from ..lake.table import LakeTable
+from ..lake.parquet_snapshot import CommitConflictError, SnapshotTable
 from .checkpoint import Checkpoint
 from .metrics import LineageLog, batch_record, partition_lineage
 
@@ -33,7 +33,7 @@ class InjectedFailure(RuntimeError):
     """Raised by tests to simulate a mid-replay crash."""
 
 
-def _merge_with_retry(table: LakeTable, df: DataFrame, bid: str, attempts: int = 3,
+def _merge_with_retry(table: SnapshotTable, df: DataFrame, bid: str, attempts: int = 3,
                       mode: str | None = None):
     """Apply one batch, retrying on optimistic-concurrency conflicts.
 
@@ -43,8 +43,6 @@ def _merge_with_retry(table: LakeTable, df: DataFrame, bid: str, attempts: int =
     this very batch, the redo is a no-op skip). The returned stats record
     how many attempts the merge took. ``mode`` overrides the table's
     merge mode (None keeps it)."""
-    from ..lake.parquet_snapshot import CommitConflictError
-
     for attempt in range(1, attempts + 1):
         try:
             stats = table.merge(df, batch_id=bid, mode=mode)
@@ -56,21 +54,16 @@ def _merge_with_retry(table: LakeTable, df: DataFrame, bid: str, attempts: int =
             return stats
 
 
-def _split_dead_letters(table: LakeTable, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _split_dead_letters(table: SnapshotTable, df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(valid, malformed) halves of a batch under ``table``'s key, ordering
     and op columns (operators/quarantine.py)."""
     from ..operators.quarantine import split_quarantine
 
-    return split_quarantine(
-        df,
-        list(getattr(table, "key_cols", ())),
-        list(getattr(table, "order_cols", ())),
-        getattr(table, "op_col", None),
-    )
+    return split_quarantine(df, table.key_cols, table.order_cols, table.op_col)
 
 
-def _apply_batch(table: LakeTable, df: DataFrame, bid: str,
-                 quarantine_table: LakeTable | None = None,
+def _apply_batch(table: SnapshotTable, df: DataFrame, bid: str,
+                 quarantine_table: SnapshotTable | None = None,
                  bad: DataFrame | None = None):
     """Merge a batch's malformed half into ``quarantine_table`` under
     ``q-<bid>``, then the batch into ``table`` under ``bid``. Quarantine
@@ -106,14 +99,14 @@ class ReplayResult:
 
 
 def replay(
-    table: LakeTable,
+    table: SnapshotTable,
     checkpoint: Checkpoint,
     batch_provider: Callable[[int], DataFrame],
     batch_ids: Iterable[int],
     lineage: LineageLog | None = None,
     fail_before_merge: int | None = None,
     fail_before_checkpoint: int | None = None,
-    quarantine_table: LakeTable | None = None,
+    quarantine_table: SnapshotTable | None = None,
     txn_col: str | None = None,
     txn_end_col: str | None = None,
     txn_flush: bool = False,
@@ -249,11 +242,11 @@ def replay(
 
 def stream_into_table(
     stream_df: DataFrame,
-    table: LakeTable,
+    table: SnapshotTable,
     checkpoint: Checkpoint,
     spark_checkpoint_dir: str,
     trigger_once: bool = True,
-    quarantine_table: LakeTable | None = None,
+    quarantine_table: SnapshotTable | None = None,
     auto_compact_delta_files: int | None = None,
 ):
     """Structured Streaming sink: micro-batches merge into the lake table.
@@ -288,7 +281,7 @@ def stream_into_table(
         if auto_compact_delta_files is not None:
             # dead letters land as MOR deltas too (_apply_batch)
             for t in (table, quarantine_table):
-                if t is not None and hasattr(t, "compact"):
+                if t is not None:
                     t.compact(
                         expire_tombstones=False,
                         max_delta_files_per_bucket=auto_compact_delta_files,

@@ -1,5 +1,4 @@
-"""S9 catalog/DDL surface: SQL views over lake tables + Iceberg DDL
-generation."""
+"""S9 catalog surface: SQL views over lake tables."""
 
 from __future__ import annotations
 
@@ -40,18 +39,3 @@ def test_register_views_sql_queryable(spark, tmp_table_dir):
         "JOIN code_files_v0 o ON l.repo = o.repo AND l.path = o.path GROUP BY l.repo"
     )
     assert j.count() > 0
-
-
-def test_iceberg_ddl_generation(spark, tmp_table_dir):
-    tbl = _tbl(spark, tmp_table_dir)
-    stmts = catalog.promote_sql(tbl, "lake.db.code_files")
-    ddl, merge = stmts
-    assert ddl.startswith("CREATE TABLE IF NOT EXISTS lake.db.code_files")
-    assert "USING iceberg" in ddl
-    assert "PARTITIONED BY (bucket(8, repo), bucket(8, path))" in ddl
-    assert "repo STRING" in ddl and "commit_seq BIGINT" in ddl
-    assert merge.startswith("MERGE INTO lake.db.code_files")
-    # both parse as valid Spark SQL (catalog analysis needs the jar)
-    parser = spark._jsparkSession.sessionState().sqlParser()
-    for s in stmts + [catalog.create_schema_sql("staging")]:
-        parser.parsePlan(s)

@@ -166,3 +166,45 @@ def test_concurrent_writers_with_idempotent_overlap(spark, tmp_table_dir):
     for b in range(n_batches):
         serial.merge(batch_events(spark, cfg, b), batch_id=f"b{b}")
     assert _state_set(tbl.read()) == _state_set(serial.read())
+
+
+def test_concurrent_merges_leave_session_conf_untouched(spark, tmp_path):
+    """merge() pins AQE off (and, for a full-width COW apply, the shuffle
+    width) on the shared session for its apply job. Concurrent MOR and COW
+    merges into tables of different bucket counts must each restore what
+    they found, so the session reads the same conf afterwards."""
+    confs = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    before = {k: spark.conf.get(k) for k in confs}
+    cfg = ChangeLogConfig(
+        n_events=1_600, n_repos=4, paths_per_repo=40, n_batches=6
+    )
+    errors: list[str] = []
+    start = threading.Barrier(2)
+
+    def writer(path: str, n_buckets: int) -> None:
+        try:
+            tbl = SnapshotTable(spark, path, n_buckets=n_buckets)
+            start.wait(timeout=120)
+            for b in range(cfg.n_batches):
+                tbl.merge(
+                    batch_events(spark, cfg, b), batch_id=f"b{b}",
+                    mode="cow" if b % 2 == 0 else "mor",
+                )
+        except Exception as e:  # noqa: BLE001
+            errors.append(f"{n_buckets} buckets: {type(e).__name__}: {e}")
+
+    threads = [
+        threading.Thread(target=writer, args=(str(tmp_path / f"t{n}"), n))
+        for n in (16, 4)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=900)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [], errors
+    assert {k: spark.conf.get(k) for k in confs} == before

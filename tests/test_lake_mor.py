@@ -326,7 +326,7 @@ def test_mor_merge_is_one_spark_job(spark, tmp_table_dir, spark_jobs):
     assert "stats" not in st.phase_ms
     assert st.rows_in == batch_events(spark, CFG, 1).count()
     # the stats job is two jobs under AQE, the session default; pin it,
-    # since concurrent merges earlier in a session can leave it off
+    # so the count does not hang on conf an earlier test left behind
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try:
