@@ -38,10 +38,7 @@ from .parquet_snapshot import SnapshotTable
 
 
 def _live(t: SnapshotTable, version, buckets=None) -> DataFrame:
-    v = t._resolve_version(version)
-    if v is None:
-        raise FileNotFoundError(f"table {t.path} has no snapshots")
-    return t._live(t._resolved_stored(t._load_manifest(v), buckets))
+    return t._live(t._resolved_stored(t._manifest(version), buckets))
 
 
 def bucket_summaries(

@@ -42,8 +42,11 @@ zero extra dependencies:
 
 Merge algorithm (ONE shuffle total, skew-tolerant):
 
-1. compute affected buckets from the batch's key columns (column-pruned
-   scan, tiny collect of ≤ n_buckets pre-aggregated rows);
+1. copy-on-write (and the bootstrap merge) only: compute affected buckets
+   from the batch's key columns (column-pruned scan, tiny collect of
+   ≤ n_buckets pre-aggregated rows). A merge-on-read merge has no such
+   job: it reads no target, and its affected buckets are the bucket
+   directories its write produced;
 2. union(target rows of affected buckets, raw batch) → one LWW
    aggregation. Its partial (map-side) phase combines duplicate/hot keys
    before the shuffle — a hot repo costs each reducer O(map_partitions),
@@ -277,15 +280,11 @@ class SnapshotTable:
         self.key_bloom_fpp = key_bloom_fpp
         # committed_batch_ids incremental cache: (version it covers, ids)
         self._bid_cache: tuple[int | None, set[str] | None] = (None, None)
-        # file_stats carry cache: (version, its file_stats dict). Populated
-        # only on this handle's own successful _commit, so it can never hold
-        # stats for a version another writer won — a parent written by
-        # someone else misses the cache and falls back to the file read.
-        # Keeps the steady-state merge loop free of a per-commit parent-
-        # manifest re-read (pure serial driver cost at high merge rates).
-        self._stats_cache: tuple[int | None, dict | None] = (None, None)
-        # same carry-cache idea for bloom sidecar refs (see _stats_cache note)
-        self._bloom_cache: tuple[int | None, dict | None] = (None, None)
+        # the last manifest this handle committed, set only after its CAS
+        # link wins. Versions are never reused, so it cannot go stale: a
+        # merge whose head is another writer's version reads that from
+        # disk. Read-only — a new manifest may share its file lists.
+        self._head: dict | None = None
         # bloom sidecar contents by filename, read-once per handle
         self._sidecar_cache: dict[str, dict] = {}
         # commit-instant cache for version_as_of: committed manifests are
@@ -325,6 +324,40 @@ class SnapshotTable:
         self._validate_manifest(m)
         return m
 
+    def _manifest(self, version: int | str | None = None) -> dict:
+        """The loaded, validated manifest of a snapshot: ``version`` None
+        is the head, a string a tag name, an int that version."""
+        if version is None:
+            version = self._current_version()
+            if version is None:
+                raise FileNotFoundError(f"table {self.path} has no snapshots")
+        elif isinstance(version, str):
+            try:
+                with open(self._tag_path(self._check_ref_name(version))) as f:
+                    version = json.load(f)["version"]
+            except FileNotFoundError:
+                raise FileNotFoundError(
+                    f"table {self.path} has no tag {version!r}"
+                ) from None
+        return self._load_manifest(int(version))
+
+    def _parent(self, version: int) -> dict:
+        """Manifest ``version`` as the base of a new commit: the head when
+        it is that version, else read from disk. Unvalidated: validation
+        adopts the manifest's n_buckets, and overwrite() must keep its own
+        layout (merge validates). Read-only: copy whatever you change."""
+        if self._head is not None and self._head["version"] == version:
+            return self._head
+        with open(self._manifest_path(version)) as f:
+            return json.load(f)
+
+    @staticmethod
+    def _data_files(m: dict) -> Iterable[str]:
+        """Every data file a manifest references: base, then MOR deltas."""
+        for fmap in (m["files"], m.get("delta_files") or {}):
+            for fl in fmap.values():
+                yield from fl
+
     def _validate_manifest(self, m: dict) -> None:
         """Refuse tables written under a different bucket function or key
         layout (ADVICE: manifests must carry a bucket-fn id — a silent
@@ -350,18 +383,19 @@ class SnapshotTable:
 
     def _new_manifest(
         self,
-        version: int,
-        parent: int | None,
+        parent: dict | None,
         schema_json: dict,
         files: dict,
         summary: dict,
         delta_files: dict | None = None,
     ) -> dict:
+        """The manifest of the next version on top of ``parent`` (None: the
+        first version)."""
         m = {
             "format-version": FORMAT_VERSION,
             "bucket_fn": BUCKET_FN_ID,
-            "version": version,
-            "parent_version": parent,
+            "version": 0 if parent is None else parent["version"] + 1,
+            "parent_version": None if parent is None else parent["version"],
             "schema": schema_json,
             "n_buckets": self.n_buckets,
             "key_cols": self.key_cols,
@@ -373,93 +407,52 @@ class SnapshotTable:
         # snapshots — pre-MOR manifests stay valid and byte-identical)
         if delta_files:
             m["delta_files"] = {b: fl for b, fl in delta_files.items() if fl}
-        stats = self._collect_file_stats(parent, files, delta_files)
+        stats, bloom_refs = self._carry(parent or {}, m)
         if stats:
             m["file_stats"] = stats
-        bloom_refs = self._collect_bloom_refs(parent, files, delta_files, schema_json)
         if bloom_refs:
             m["bloom_refs"] = bloom_refs
         return m
 
-    def _collect_file_stats(
-        self, parent: int | None, files: dict, delta_files: dict | None
-    ) -> dict:
-        """Per-file column [min, max] for the new manifest: carried forward
-        by relative path for files surviving from the parent snapshot
-        (carry even when this handle has no stats_cols, so a stats-less
-        writer can't strip another writer's pruning metadata), footer-read
-        for files new in this commit when stats_cols is set."""
-        carried: dict = {}
-        if parent is not None:
-            cached_v, cached_stats = self._stats_cache
-            if cached_v == parent and cached_stats is not None:
-                carried = cached_stats
-            else:
-                # raw read, NOT _load_manifest: its validation ADOPTS the
-                # parent's n_buckets onto this handle, which would silently
-                # undo a rebucket() mid-commit (observed: rebucket(64) left
-                # the handle at the old count). Stats harvesting needs no
-                # layout validation.
-                with open(self._manifest_path(parent)) as f:
-                    carried = json.load(f).get("file_stats") or {}
-        if not carried and not self.stats_cols:
-            # stats-less table: nothing to carry, nothing to harvest —
-            # skip the file walk (hot per-commit path in replay loops)
-            return {}
-        out: dict = {}
-        for fmap in (files, delta_files or {}):
-            for fl in fmap.values():
-                for f in fl:
-                    prev = carried.get(f)
-                    if prev is not None:
-                        out[f] = prev
-                    elif self.stats_cols:
-                        st = self._footer_stats(f)
-                        if st:
-                            out[f] = st
-        return out
+    def _carry(self, parent: dict, m: dict) -> tuple[dict, dict]:
+        """Per-file metadata of the new manifest ``m``: column [min, max]
+        stats and key Bloom filter refs, each carried forward by relative
+        path for files surviving from ``parent`` — even when this handle
+        has stats or blooms off, so such a writer can't strip another
+        writer's pruning metadata. Files new in this commit get stats from
+        their parquet footers when ``stats_cols`` is set, and blooms from
+        one distributed pass when ``key_bloom_fpp`` is set, reading the key
+        columns under the manifest's schema (no inference job).
 
-    def _collect_bloom_refs(
-        self, parent: int | None, files: dict, delta_files: dict | None,
-        schema_json: dict,
-    ) -> dict:
-        """Per-file key Bloom filters for the new manifest, as {relpath:
-        sidecar filename} — the puffin-style layout: the manifest carries
-        only string pointers, the filter BYTES live in one
-        ``manifests/blooms-*.json`` sidecar
-        written per commit for that commit's new files and shared by
-        every later manifest that still references them, so manifest
-        size stays O(files), not O(files × bloom bytes), and readers
-        fetch filter bytes only for the buckets they actually probe.
-        Refs are carried forward by relative path for surviving files
-        (even when THIS handle has blooms disabled — a bloom-less writer
-        must not strip another writer's skipping metadata, same rule as
-        _collect_file_stats); new files get a fresh bloom via one
-        distributed pass when ``key_bloom_fpp`` is set, reading the key
-        columns under the table's ``schema_json`` (no inference job)."""
-        c_refs: dict = {}
-        if parent is not None:
-            cached_v, cached = self._bloom_cache
-            if cached_v == parent and cached is not None:
-                c_refs = cached
-            else:
-                with open(self._manifest_path(parent)) as f:
-                    c_refs = json.load(f).get("bloom_refs") or {}
-        if not (c_refs or self.key_bloom_fpp):
-            return {}
+        Bloom refs map {relpath: sidecar filename} — the puffin-style
+        layout: the manifest carries only string pointers, the filter
+        BYTES live in one ``manifests/blooms-*.json`` sidecar written per
+        commit for that commit's new files and shared by every later
+        manifest that still references them, so manifest size stays
+        O(files), not O(files × bloom bytes), and readers fetch filter
+        bytes only for the buckets they actually probe."""
+        carried = parent.get("file_stats") or {}
+        c_refs = parent.get("bloom_refs") or {}
+        stats: dict = {}
         refs: dict = {}
         fresh: dict[str, str] = {}
-        for fmap in (files, delta_files or {}):
-            for fl in fmap.values():
-                for f in fl:
-                    if f in c_refs:
-                        refs[f] = c_refs[f]
-                    elif self.key_bloom_fpp:
-                        fresh[f] = os.path.join(self.path, f)
+        # a table without stats or blooms skips the file walk (hot
+        # per-commit path in replay loops)
+        if carried or c_refs or self.stats_cols or self.key_bloom_fpp:
+            for f in self._data_files(m):
+                st = carried.get(f)
+                if st is None and self.stats_cols:
+                    st = self._footer_stats(f) or None
+                if st is not None:
+                    stats[f] = st
+                if f in c_refs:
+                    refs[f] = c_refs[f]
+                elif self.key_bloom_fpp:
+                    fresh[f] = os.path.join(self.path, f)
         if fresh:
             from .bloom import build_file_blooms
 
-            schema = T.StructType.fromJson(schema_json)
+            schema = T.StructType.fromJson(m["schema"])
             built = build_file_blooms(
                 self.spark, fresh, self.key_cols, self.key_bloom_fpp,
                 key_schema=T.StructType([schema[k] for k in self.key_cols]),
@@ -474,7 +467,7 @@ class SnapshotTable:
                 self._sidecar_cache[name] = built
                 for rel in built:
                     refs[rel] = name
-        return refs
+        return stats, refs
 
     def _blooms_for(self, m: dict, files: list[str]) -> dict:
         """{relpath: bloom} for JUST the requested files, from the sidecars
@@ -585,11 +578,33 @@ class SnapshotTable:
             "re-read the head and redo the merge",
         )
         self._instant_cache[version] = manifest["committed_at"]
-        # cache THIS handle's committed stats so the next commit's carry
-        # step needs no parent-manifest re-read (see _collect_file_stats);
-        # set only after the link wins, so a lost race never poisons it
-        self._stats_cache = (version, manifest.get("file_stats") or {})
-        self._bloom_cache = (version, manifest.get("bloom_refs") or {})
+        self._head = manifest
+
+    def _commit_rewrite(
+        self, parent: dict | None, data: DataFrame, summary: dict, *,
+        schema_json: dict | None = None, rewrite: set[str] | None = None,
+        t0: float | None = None, **write_opts,
+    ) -> int:
+        """Write ``data`` (with _bucket) as one new commit's files and
+        commit the next version on top of ``parent``. With ``rewrite``,
+        buckets outside it keep the parent's base and delta file lists;
+        without it the write replaces the whole table. ``t0`` stamps the
+        summary's ``wall_ms``. Returns the new version."""
+        new_files = self._write_buckets(data, uuid.uuid4().hex[:12], **write_opts)
+        files: dict = {}
+        deltas: dict = {}
+        if rewrite is not None:
+            files = {b: fl for b, fl in parent["files"].items() if b not in rewrite}
+            deltas = {b: fl for b, fl in self._delta_map(parent).items() if b not in rewrite}
+        files.update(new_files)
+        if t0 is not None:
+            summary = {"wall_ms": round((time.time() - t0) * 1000, 1), **summary}
+        m = self._new_manifest(
+            parent, schema_json or parent["schema"], files, summary,
+            delta_files=deltas,
+        )
+        self._commit(m)
+        return m["version"]
 
     def exists(self) -> bool:
         return self._current_version() is not None
@@ -598,8 +613,7 @@ class SnapshotTable:
         return self._current_version()
 
     def schema(self) -> T.StructType:
-        m = self._load_manifest(self._current_version())
-        return T.StructType.fromJson(m["schema"])
+        return T.StructType.fromJson(self._manifest()["schema"])
 
     def snapshots(self) -> list[dict]:
         v = self._current_version()
@@ -658,21 +672,6 @@ class SnapshotTable:
 
     def delete_tag(self, name: str) -> None:
         os.unlink(self._tag_path(self._check_ref_name(name)))
-
-    def _resolve_version(self, version) -> int | None:
-        """int passes through; a string resolves as a tag name; None means
-        the current head."""
-        if version is None:
-            return self._current_version()
-        if isinstance(version, str):
-            try:
-                with open(self._tag_path(self._check_ref_name(version))) as f:
-                    return int(json.load(f)["version"])
-            except FileNotFoundError:
-                raise FileNotFoundError(
-                    f"table {self.path} has no tag {version!r}"
-                ) from None
-        return int(version)
 
     def _staged_path(self, wap_id: str) -> str:
         return os.path.join(self.path, "manifests", f"staged-{wap_id}.json")
@@ -746,7 +745,7 @@ class SnapshotTable:
         older than the last ``keep_last`` and delete data files referenced
         ONLY by them. Time travel beyond retention then raises (as in
         Iceberg); replay idempotence is unaffected — the checkpoint
-        manifest, not snapshot history, is the replay's skip authority,
+        log, not snapshot history, is the replay's skip authority,
         and the lake-side batch-id dedup still covers the retained window.
         """
         if keep_last < 1:
@@ -794,20 +793,13 @@ class SnapshotTable:
             else:
                 expire.append(m_side)
 
-        def _refs(m: dict):
-            """Every data file a manifest references: base + MOR deltas."""
-            for fl in m["files"].values():
-                yield from fl
-            for fl in self._delta_map(m).values():
-                yield from fl
-
-        keep_files = {f for m in keep for f in _refs(m)}
+        keep_files = {f for m in keep for f in self._data_files(m)}
         keep_sidecars = {
             r for m in keep for r in (m.get("bloom_refs") or {}).values()
         }
         removed_files = removed_sidecars = 0
         for m in expire:
-            for f in _refs(m):
+            for f in self._data_files(m):
                 if f not in keep_files:
                     p = os.path.join(self.path, f)
                     if os.path.exists(p):
@@ -880,8 +872,7 @@ class SnapshotTable:
                 m = self._load_manifest(v)
             except FileNotFoundError:
                 continue  # raced with a concurrent expire_snapshots
-            live.update(f for fl in m["files"].values() for f in fl)
-            live.update(f for fl in self._delta_map(m).values() for f in fl)
+            live.update(self._data_files(m))
             live_sidecars.update((m.get("bloom_refs") or {}).values())
         removed = {
             "data_files": 0,
@@ -905,8 +896,7 @@ class SnapshotTable:
             else:
                 with open(p) as f:
                     sm = json.load(f)
-                live.update(f for fl in sm["files"].values() for f in fl)
-                live.update(f for fl in self._delta_map(sm).values() for f in fl)
+                live.update(self._data_files(sm))
                 live_sidecars.update((sm.get("bloom_refs") or {}).values())
         data_root = os.path.join(self.path, "data")
         if os.path.isdir(data_root):
@@ -959,7 +949,10 @@ class SnapshotTable:
         since the last call — including another writer's (the walk stops at
         the cached version, which is always an ancestor: versions are
         linear under the CAS commit)."""
-        cur = self._current_version()
+        return self._batch_ids(self._current_version())
+
+    def _batch_ids(self, cur: int | None) -> set[str]:
+        """committed_batch_ids as of head version ``cur``."""
         if cur is None:
             return set()
         cached_v, cached = self._bid_cache
@@ -1069,10 +1062,7 @@ class SnapshotTable:
     def _read_stored(self, version: int | str | None = None) -> DataFrame:
         """All stored rows of a snapshot, tombstones included, with op —
         one winner row per key (MOR deltas resolved, see _resolved_stored)."""
-        v = self._resolve_version(version)
-        if v is None:
-            raise FileNotFoundError(f"table {self.path} has no snapshots")
-        return self._resolved_stored(self._load_manifest(v))
+        return self._resolved_stored(self._manifest(version))
 
     def _resolved_stored(
         self, m: dict, buckets: Iterable[str] | None = None
@@ -1136,10 +1126,7 @@ class SnapshotTable:
         then filters the superset to the requested tuples."""
         import pyspark.sql.functions as _F
 
-        v = self._resolve_version(version)
-        if v is None:
-            raise FileNotFoundError(f"table {self.path} has no snapshots")
-        m = self._load_manifest(v)
+        m = self._manifest(version)
         schema = self._stored_schema(T.StructType.fromJson(m["schema"]))
         key_df = self.spark.createDataFrame(keys, schema=T.StructType(
             [T.StructType.fromJson(m["schema"])[k] for k in self.key_cols]
@@ -1215,10 +1202,7 @@ class SnapshotTable:
         pruning. Correctness does not depend on pruning at all: the full
         predicate is re-applied to the scanned rows, so stats only decide
         which files open."""
-        v = self._resolve_version(version)
-        if v is None:
-            raise FileNotFoundError(f"table {self.path} has no snapshots")
-        m = self._load_manifest(v)
+        m = self._manifest(version)
         stats = m.get("file_stats") or {}
         deltas = self._delta_map(m)
 
@@ -1293,16 +1277,13 @@ class SnapshotTable:
     def overwrite(self, df: DataFrame, summary: dict | None = None) -> int:
         """Full replace (initial load) — one snapshot containing all rows."""
         t0 = time.time()
-        commit_id = uuid.uuid4().hex[:12]
-        data = df.withColumn(_BUCKET, self._bucket_col(df))
-        files = self._write_buckets(data, commit_id)
-        parent = self._current_version()
-        version = 0 if parent is None else parent + 1
-        self._commit(self._new_manifest(
-            version, parent, df.schema.jsonValue(), files,
-            {"operation": "overwrite", "wall_ms": round((time.time() - t0) * 1000, 1), **(summary or {})},
-        ))
-        return version
+        cur = self._current_version()
+        return self._commit_rewrite(
+            None if cur is None else self._parent(cur),
+            df.withColumn(_BUCKET, self._bucket_col(df)),
+            {"operation": "overwrite", **(summary or {})},
+            schema_json=df.schema.jsonValue(), t0=t0,
+        )
 
     def read_changes(
         self,
@@ -1327,9 +1308,8 @@ class SnapshotTable:
         before/after payloads (old null for I, new null for D) — what
         downstream incremental aggregate maintenance needs to retract an
         update's previous contribution (see operators.incremental)."""
-        to_v = self._current_version() if to_version is None else to_version
-        m_from = self._load_manifest(from_version)
-        m_to = self._load_manifest(to_v)
+        m_from = self._manifest(from_version)
+        m_to = self._manifest(to_version)
         schema_to = T.StructType.fromJson(m_to["schema"])
 
         d_from, d_to = self._delta_map(m_from), self._delta_map(m_to)
@@ -1391,16 +1371,11 @@ class SnapshotTable:
         trigger): per-bucket delta file counts plus the maxima an
         auto-compaction policy thresholds on (streaming.stream_into_table
         ``auto_compact_delta_files``)."""
-        cur = self._current_version()
-        per = (
-            {}
-            if cur is None
-            else {
-                b: len(fl)
-                for b, fl in self._delta_map(self._load_manifest(cur)).items()
-                if fl
-            }
-        )
+        try:
+            deltas = self._delta_map(self._manifest())
+        except FileNotFoundError:  # no snapshots yet
+            deltas = {}
+        per = {b: len(fl) for b, fl in deltas.items() if fl}
         return {
             "delta_buckets": len(per),
             "max_delta_files": max(per.values(), default=0),
@@ -1440,10 +1415,7 @@ class SnapshotTable:
         10^10-row scale are far past one healthy parquet file); files stay
         key-grouped per bucket, so every read path is unchanged.
         """
-        cur = self._current_version()
-        if cur is None:
-            raise FileNotFoundError(f"table {self.path} has no snapshots")
-        m = self._load_manifest(cur)
+        m = self._manifest()
         deltas = self._delta_map(m)
 
         def expired(df: DataFrame):
@@ -1457,7 +1429,7 @@ class SnapshotTable:
         # buckets are rewritten regardless, so nothing expirable is missed
         tomb_buckets: set[str] = set()
         if expire_tombstones:
-            stored = self._read_stored(cur)
+            stored = self._resolved_stored(m)
             tomb_buckets = {
                 str(r[0])
                 for r in stored.where(expired(stored))
@@ -1474,26 +1446,17 @@ class SnapshotTable:
         }
         rewrite = tomb_buckets | fold
         if not rewrite:
-            return cur
+            return m["version"]
 
         part = self._resolved_stored(m, rewrite)
         keep = part.where(~expired(part)) if expire_tombstones else part
-        keep = keep.withColumn(_BUCKET, self._bucket_col(keep))
-        commit_id = uuid.uuid4().hex[:12]
-        new_files = self._write_buckets(
-            keep, commit_id, max_records_per_file=max_records_per_file
-        )
-        files_map = {b: fl for b, fl in m["files"].items() if b not in rewrite}
-        files_map.update(new_files)
-        version = cur + 1
-        self._commit(self._new_manifest(
-            version, cur, m["schema"], files_map,
+        return self._commit_rewrite(
+            m, keep.withColumn(_BUCKET, self._bucket_col(keep)),
             {"operation": "compact",
              "folded_delta_buckets": sum(1 for b in rewrite if deltas.get(b)),
              **(summary or {})},
-            delta_files={b: fl for b, fl in deltas.items() if b not in rewrite},
-        ))
-        return version
+            rewrite=rewrite, max_records_per_file=max_records_per_file,
+        )
 
     def _stats_bounds(
         self, m: dict, cols: list
@@ -1505,8 +1468,7 @@ class SnapshotTable:
         min/max for strings are truncation-prone and recluster's z-path is
         numeric-only anyway."""
         stats = m.get("file_stats") or {}
-        files = [f for fl in m["files"].values() for f in fl]
-        files += [f for fl in self._delta_map(m).values() for f in fl]
+        files = list(self._data_files(m))
         if not files:
             return None
         out: dict = {}
@@ -1562,12 +1524,9 @@ class SnapshotTable:
         cluster_cols = list(cluster_cols)
         if not cluster_cols:
             raise ValueError("cluster_cols must be non-empty")
-        cur = self._current_version()
-        if cur is None:
-            raise FileNotFoundError(f"table {self.path} has no snapshots")
         t0 = time.time()
-        m = self._load_manifest(cur)
-        stored = self._read_stored(cur)
+        m = self._manifest()
+        stored = self._resolved_stored(m)
         data = stored.withColumn(_BUCKET, self._bucket_col(stored))
         if strategy == "zorder":
             # table-wide bounds: free from the manifest when file_stats
@@ -1584,21 +1543,14 @@ class SnapshotTable:
             order_by: list = [_ZV]
         else:
             order_by = [F.col(c).asc_nulls_first() for c in cluster_cols]
-        commit_id = uuid.uuid4().hex[:12]
-        files = self._write_buckets(
-            data, commit_id, order_by=order_by,
-            max_records_per_file=max_records_per_file,
-        )
-        version = cur + 1
-        self._commit(self._new_manifest(
-            version, cur, m["schema"], files,
+        return self._commit_rewrite(
+            m, data,
             {"operation": "recluster", "strategy": strategy,
              "cluster_cols": cluster_cols,
              "max_records_per_file": int(max_records_per_file),
-             "wall_ms": round((time.time() - t0) * 1000, 1),
              **(summary or {})},
-        ))
-        return version
+            t0=t0, order_by=order_by, max_records_per_file=max_records_per_file,
+        )
 
     def rebucket(self, n_buckets: int, summary: dict | None = None) -> int:
         """Layout migration: rewrite the whole table under a new bucket
@@ -1619,30 +1571,21 @@ class SnapshotTable:
         the rebucketed snapshot is delta-free."""
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1 (got {n_buckets})")
-        cur = self._current_version()
-        if cur is None:
-            raise FileNotFoundError(f"table {self.path} has no snapshots")
         t0 = time.time()
-        m = self._load_manifest(cur)  # adopts the CURRENT count for the read
-        stored = self._read_stored(cur)
+        m = self._manifest()  # adopts the CURRENT count for the read
+        stored = self._resolved_stored(m)
         old_n = self.n_buckets
         self.n_buckets = n_buckets
         try:
-            data = stored.withColumn(_BUCKET, self._bucket_col(stored))
-            commit_id = uuid.uuid4().hex[:12]
-            files = self._write_buckets(data, commit_id)
-            version = cur + 1
-            self._commit(self._new_manifest(
-                version, cur, m["schema"], files,
+            return self._commit_rewrite(
+                m, stored.withColumn(_BUCKET, self._bucket_col(stored)),
                 {"operation": "rebucket", "from_buckets": old_n,
-                 "to_buckets": n_buckets,
-                 "wall_ms": round((time.time() - t0) * 1000, 1),
-                 **(summary or {})},
-            ))
+                 "to_buckets": n_buckets, **(summary or {})},
+                t0=t0,
+            )
         except BaseException:
             self.n_buckets = old_n  # failed rewrite must not poison the handle
             raise
-        return version
 
     def fsck(self, deep: bool = False) -> dict:
         """Integrity check (Iceberg table-maintenance audit analogue):
@@ -1684,9 +1627,7 @@ class SnapshotTable:
             parent = m.get("parent_version")
             if parent is not None and parent not in vset:
                 report["broken_parents"].append({"version": v, "parent": parent})
-            referenced = {
-                f for fl in m["files"].values() for f in fl
-            } | {f for fl in self._delta_map(m).values() for f in fl}
+            referenced = set(self._data_files(m))
             for f in sorted(referenced):
                 report["checked_files"] += 1
                 if not os.path.exists(os.path.join(self.path, f)):
@@ -1698,10 +1639,7 @@ class SnapshotTable:
                 if f not in referenced:
                     report["stale_blooms"].append({"version": v, "file": f})
         if deep and versions:
-            cur = self._load_manifest(versions[-1])
-            refs = {
-                f for fl in cur["files"].values() for f in fl
-            } | {f for fl in self._delta_map(cur).values() for f in fl}
+            refs = set(self._data_files(self._load_manifest(versions[-1])))
             import pyarrow.parquet as pq
             for f in sorted(refs):
                 p = os.path.join(self.path, f)
@@ -1743,13 +1681,11 @@ class SnapshotTable:
         The ops lever WAP doesn't cover: ``publish_staged`` gates *staged*
         work, ``rollback`` un-does an already-published snapshot (bad merge
         noticed late, upstream replay poisoned a range, ...)."""
-        cur = self._current_version()
-        if cur is None:
-            raise FileNotFoundError(f"table {self.path} has no snapshots")
-        target = self._resolve_version(version)
+        cur = self._manifest()["version"]
+        m = dict(self._manifest(version))  # raises if expired/missing
+        target = m["version"]
         if target == cur:
             raise ValueError(f"version {target} is already the current head")
-        m = dict(self._load_manifest(target))  # raises if expired/missing
         m["version"] = cur + 1
         m["parent_version"] = target
         m["summary"] = {
@@ -1841,7 +1777,10 @@ class SnapshotTable:
         bid = str(batch_id)
         if stage_as is not None:
             stage_as = self._check_ref_name(stage_as)
-        if self.exists() and bid in self.committed_batch_ids():
+        # the one listing of manifests/ in a merge
+        cur_version = self._current_version()
+        exists = cur_version is not None
+        if bid in self._batch_ids(cur_version):
             return MergeStats(batch_id=bid, applied=False, skipped_reason="already-committed",
                               total_buckets=self.n_buckets)
 
@@ -1852,31 +1791,29 @@ class SnapshotTable:
         # different bucket set than the one the aligned rows are written
         # under, and the manifest update would then replace untouched
         # buckets' file lists, silently dropping their rows.
-        exists = self.exists()
-        cur_version = self._current_version()
-        old_manifest = self._load_manifest(cur_version) if exists else None
-        old_delta = self._delta_map(old_manifest) if exists else {}
+        batch_schema = T.StructType(
+            [f for f in batch.schema.fields if f.name != self.op_col]
+        )
+        old_manifest = old_schema = None
+        old_delta: dict = {}
+        new_schema = batch_schema
+        if exists:
+            old_manifest = self._parent(cur_version)
+            self._validate_manifest(old_manifest)
+            old_delta = self._delta_map(old_manifest)
+            old_schema = T.StructType.fromJson(old_manifest["schema"])
+            new_schema = _merge_schemas(old_schema, batch_schema, self.key_cols)
         mode = self.merge_mode if mode is None else mode
         if mode not in ("cow", "mor"):
             raise ValueError(f"mode must be 'cow' or 'mor' (got {mode!r})")
         mor = mode == "mor" and exists  # bootstrap merge IS the base write
-        batch_schema = T.StructType(
-            [f for f in batch.schema.fields if f.name != self.op_col]
-        )
-        if exists:
-            old_schema = T.StructType.fromJson(old_manifest["schema"])
-            new_schema = _merge_schemas(old_schema, batch_schema, self.key_cols)
-        else:
-            old_schema = None
-            new_schema = batch_schema
-        version = 0 if cur_version is None else cur_version + 1
 
         def finish(schema_json: dict, files: dict, delta: dict, extra: dict,
                    phase_ms: dict, **counts) -> MergeStats:
             """Write the manifest, commit (or stage) it, report the merge."""
             t_commit = time.time()
             manifest = self._new_manifest(
-                version, cur_version, schema_json, files,
+                old_manifest, schema_json, files,
                 {"operation": "merge", "batch-id": bid, **extra,
                  **({"wap-id": stage_as} if stage_as else {}),
                  **(summary or {})},
@@ -1890,7 +1827,7 @@ class SnapshotTable:
                 phase_ms["commit"] = round((time.time() - t_commit) * 1000, 1)
             return MergeStats(
                 batch_id=bid, applied=stage_as is None, **counts,
-                total_buckets=self.n_buckets, snapshot_version=version,
+                total_buckets=self.n_buckets, snapshot_version=manifest["version"],
                 staged_as=stage_as,
                 skipped_reason="staged" if stage_as is not None else None,
                 wall_ms=(time.time() - t0) * 1000, phase_ms=phase_ms,
@@ -1900,7 +1837,7 @@ class SnapshotTable:
             # still commit: the batch id must be recorded for resume skips
             return finish(
                 (old_manifest or {}).get("schema", batch_schema.jsonValue()),
-                (old_manifest or {}).get("files", {}), old_delta, {}, {},
+                dict((old_manifest or {}).get("files", {})), old_delta, {}, {},
                 rows_in=0,
             )
 
@@ -1994,8 +1931,8 @@ class SnapshotTable:
         #   n_buckets-wide exchange would schedule mostly-empty tasks
         #   (4096-bucket tables, dozen-key batches).
         # * COW, full-width batch: spark.sql.shuffle.partitions pinned to
-        #   n_buckets (AQE partition-coalescing off for this job) makes the
-        #   aggregation exchange HashPartitioning(key_cols, n_buckets) — the
+        #   n_buckets (AQE, and with it partition coalescing, is off for
+        #   this job) makes the aggregation exchange HashPartitioning(key_cols, n_buckets) — the
         #   exact bucket function — so partition id == bucket id and the
         #   bucketed write needs no repartition. Partial aggregation runs
         #   map-side BEFORE this exchange (hot-key combine: a hot repo
@@ -2036,9 +1973,6 @@ class SnapshotTable:
                     unioned = unioned.repartition(len(affected), *keys)
                 else:
                     set_conf("spark.sql.shuffle.partitions", str(self.n_buckets))
-                    set_conf(
-                        "spark.sql.adaptive.coalescePartitions.enabled", "false"
-                    )
                 merged = lww_latest(unioned, self.key_cols, self.order_cols)
                 # decode op back to the stored string form (see encode above)
                 merged = merged.withColumn(

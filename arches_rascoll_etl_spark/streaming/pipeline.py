@@ -4,7 +4,7 @@ The batch loop the reference runs by hand (stage → generate SQL → psql in
 order, README.md:29-42) becomes a driver that replays micro-batches of the
 change log into a SnapshotTable with two-level idempotence:
 
-1. checkpoint manifest of applied batch ids (fast skip on resume);
+1. the checkpoint log of applied batch ids (fast skip on resume);
 2. the lake's committed ``batch-id`` snapshot summaries (correct skip even
    when the crash landed between lake commit and checkpoint write).
 
@@ -148,16 +148,31 @@ def replay(
 
     res = ReplayResult()
     t_start = time.time()
-    applied_ckpt = checkpoint.applied_batch_ids()
+    applied_order = checkpoint.load()["applied"]
+    applied_ckpt = set(applied_order)
     pending_root = checkpoint.path + ".pending" if txn_col is not None else None
     prev_pending_bid: str | None = None
+
+    def record(bid: str, stats, part_lineage: list, t0: float) -> None:
+        """Lineage, checkpoint and result bookkeeping of one merged batch."""
+        rec = batch_record(bid, stats.as_dict(), part_lineage, t0)
+        if lineage is not None:
+            lineage.append(rec)
+        checkpoint.record(bid, stats.snapshot_version, rec)
+        if stats.applied:
+            res.applied.append(bid)
+            res.events += stats.rows_in
+            res.stats.append(stats)
+        else:
+            res.skipped.append(bid)
+
     if pending_root is not None and os.path.isdir(pending_root):
         # resume/tail-follow: the carryover is the pending parquet of
         # the LAST APPLIED batch (a stale pending dir from a crash
         # between pending-write and checkpoint is recomputed, not
         # trusted), found even when this call's batch list does not
         # include the already-applied batches
-        for a in reversed(checkpoint.load()["applied"]):
+        for a in reversed(applied_order):
             if os.path.isdir(os.path.join(pending_root, a)):
                 prev_pending_bid = a
                 break
@@ -201,41 +216,20 @@ def replay(
         stats = _apply_batch(table, df, bid, quarantine_table, bad)
         if fail_before_checkpoint == b:
             raise InjectedFailure(f"after merge, before checkpoint of batch {bid}")
-        part_lineage = partition_lineage(df) if stats.applied else []
-        rec = batch_record(bid, stats.as_dict(), part_lineage, t0)
-        if lineage is not None:
-            lineage.append(rec)
-        checkpoint.record(bid, stats.snapshot_version, rec)
+        record(bid, stats, partition_lineage(df) if stats.applied else [], t0)
         if pending_root is not None and os.path.isdir(pending_root):
             # this batch's carryover subsumes all earlier ones
             for d in os.listdir(pending_root):
                 if d != bid:
                     shutil.rmtree(os.path.join(pending_root, d), ignore_errors=True)
-        if stats.applied:
-            res.applied.append(bid)
-            res.events += stats.rows_in
-            res.stats.append(stats)
-        else:
-            res.skipped.append(bid)
 
     if txn_flush and prev_pending_bid is not None:
         fb = f"txnflush-{prev_pending_bid}"
         pend_path = os.path.join(pending_root, prev_pending_bid)
         if fb not in applied_ckpt and os.path.isdir(pend_path):
-            from pyspark.sql import SparkSession
-
-            spark = SparkSession.getActiveSession()
-            if spark is not None:
-                t0 = time.time()
-                stats = _apply_batch(table, spark.read.parquet(pend_path), fb)
-                rec = batch_record(fb, stats.as_dict(), [], t0)
-                if lineage is not None:
-                    lineage.append(rec)
-                checkpoint.record(fb, stats.snapshot_version, rec)
-                if stats.applied:
-                    res.applied.append(fb)
-                    res.events += stats.rows_in
-                    res.stats.append(stats)
+            t0 = time.time()
+            stats = _apply_batch(table, table.spark.read.parquet(pend_path), fb)
+            record(fb, stats, [], t0)
     res.wall_sec = time.time() - t_start
     return res
 

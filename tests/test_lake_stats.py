@@ -249,7 +249,7 @@ def test_recluster_bounds_from_manifest_stats(spark, tmp_path):
             m = json.load(open(mp))
             m.pop("file_stats", None)
             json.dump(m, open(mp, "w"))
-            t._stats_cache = (None, None)
+            t = SnapshotTable(spark, path, key_cols=("k",), order_cols=("seq",), n_buckets=2, stats_cols=("a", "b"))
         v = t.recluster(["a", "b"], max_records_per_file=200)
         m = json.load(open(os.path.join(path, "manifests", f"v{v:06d}.json")))
         outs[path] = sorted(

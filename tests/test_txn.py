@@ -8,6 +8,8 @@ reconstructs the carryover from the persisted pending parquet.
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,6 +113,35 @@ def test_replay_never_exposes_partial_txn(spark, tmp_path, end_col):
     res2 = replay(tbl, ckpt, provider, [0, 1, 2],
                   txn_col="txid", txn_end_col=end_col, txn_flush=True)
     assert res2.applied == []
+
+
+def test_txn_flush_off_main_thread(spark, tmp_path):
+    """txn_flush applies the final carryover when replay runs on a fresh
+    worker thread with every batch already applied: that thread runs no
+    Spark call before the flush, so its thread-local active session is
+    unset."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4)
+    ckpt = Checkpoint(str(tmp_path / "ckpt.json"))
+    provider = lambda b: _df(spark, BATCHES[b])  # noqa: E731
+    replay(tbl, ckpt, provider, [0, 1, 2], txn_col="txid")
+    assert ("r", "e.py", "c8") not in _keys(tbl.read())
+    out = {}
+
+    def run():
+        try:
+            out["res"] = replay(tbl, ckpt, provider, [0, 1, 2],
+                                txn_col="txid", txn_flush=True)
+        except Exception as e:  # noqa: BLE001 — re-raised below
+            out["err"] = e
+
+    th = threading.Thread(target=run)
+    th.start()
+    th.join(timeout=600)
+    assert not th.is_alive()
+    if "err" in out:
+        raise out["err"]
+    assert any(b.startswith("txnflush-") for b in out["res"].applied)
+    assert ("r", "e.py", "c8") in _keys(tbl.read())
 
 
 @pytest.mark.parametrize("mode", ["before_merge", "before_checkpoint"])
